@@ -33,7 +33,12 @@ object Bench {
         val src = scala.io.Source.fromFile("/proc/loadavg")
         try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
-    val gateMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
+    // The default gate scales with the host: the bench's own executors keep
+    // up to one thread per core runnable, so the mid-run re-gate below must
+    // sit above that (an absolute 2.0 stalled every rep on a 4-core host);
+    // the extra half load per core is the outside load it tolerates.
+    val gateMax = sys.env.get("SPARK_GRAFT_BENCH_LOAD_GATE").map(_.toDouble)
+      .getOrElse(1.5 * Runtime.getRuntime.availableProcessors)
     val gateCapS = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WAIT", "300").toInt
     val gateT0 = System.nanoTime()
     var gated = load1() >= 0 && load1() < gateMax

@@ -29,12 +29,13 @@ object HostCanary {
   def measure(): Double = Seq.fill(3)(once()).min
 
   /** All-cores variant (r19): the same loop on `threads` concurrent
-    * threads, wall time of the slowest, min-of-2. The r19 sf0.1 run showed
-    * why both are needed: a UNIFORM +16% per-lane shift at a single-thread
-    * canary ratio of only 1.035 — this host throttles under MULTI-core
-    * load in a way a single busy core doesn't see. A flat canary_sec with
-    * a raised canary_mt_sec says "host, not code" for 32-thread lanes. */
-  def measureMulti(threads: Int = 16): Double = {
+    * threads (default: one per available core), wall time of the slowest,
+    * min-of-2. The r19 sf0.1 run showed why both are needed: a UNIFORM +16%
+    * per-lane shift at a single-thread canary ratio of only 1.035 — a host
+    * can throttle under MULTI-core load in a way a single busy core doesn't
+    * see. A flat canary_sec with a raised canary_mt_sec says "host, not
+    * code" for all-core lanes. */
+  def measureMulti(threads: Int = Runtime.getRuntime.availableProcessors): Double = {
     def onceAll(): Double = {
       val t0 = System.nanoTime()
       val ts = (0 until threads).map { _ =>

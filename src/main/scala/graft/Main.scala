@@ -169,33 +169,25 @@ object Main {
   }
 
   /** A stored index's [[KeyedIndex]] face, picked by the sidecar's m:
-    * 1 long (m <= 32), 2 (m <= 64), ceil(m/32) up to 4 beyond — so every
+    * one long (m <= 32) or ceil(m/32) = 2..4 longs (m <= 128) — so every
     * downstream subcommand is width-generic over the full reference
     * parameter space. */
   private def keyedIndexFor(params: IndexParams,
       bcTax: org.apache.spark.broadcast.Broadcast[Taxonomy]): LongKeyIndex =
-    if (params.m > 64)
-      new XWideMinimizerIndex(params.k, params.m, bcTax, params.spaces,
-        params.demoted.getOrElse(Array.emptyLongArray))
-    else if (params.m > 32)
+    if (params.m > 32)
       new WideMinimizerIndex(params.k, params.m, bcTax, params.spaces,
         params.demoted.getOrElse(Array.emptyLongArray))
     else new MinimizerIndex(params, bcTax)
 
   /** [[keyedIndexFor]] plus the bucketed records reloaded via the width's
-    * own DDL. */
+    * own key-column DDL. */
   private def openKeyed(spark: SparkSession, idxPath: String,
       params: IndexParams,
       bcTax: org.apache.spark.broadcast.Broadcast[Taxonomy])
-      : (KeyedIndex, org.apache.spark.sql.DataFrame) =
-    keyedIndexFor(params, bcTax) match {
-      case x: XWideMinimizerIndex =>
-        (x, x.loadRecords(spark, idxPath, params.buckets))
-      case w: WideMinimizerIndex =>
-        (w, w.loadRecords(spark, idxPath, params.buckets))
-      case n: MinimizerIndex =>
-        (n, MinimizerIndex.loadRecords(spark, idxPath, params.buckets))
-    }
+      : (LongKeyIndex, org.apache.spark.sql.DataFrame) = {
+    val index = keyedIndexFor(params, bcTax)
+    (index, index.loadRecords(spark, idxPath, params.buckets))
+  }
 
   /** Strict boolean flag parse: "true"/"false" case-insensitively; anything
     * else ("1", a typo) fails loudly instead of silently acting as false. */
@@ -407,37 +399,18 @@ object Main {
               FrequencyOrdering.topMers(packedLib, m, freqFraction, freqTop,
                 freqSeed)
           }
-        if (m > 64) {
-          // extra-wide path: ceil(m/32)-long keys up to the reference's
-          // 4-long maximum (m <= 128), same packed build + sidecar protocol
-          val s = opts.getOrElse("s", "0").toInt
-          val packedLib = loadPackedLibrary(spark, opts, k)
-          val demoted = opts.getOrElse("o", "xor") match {
-            case "frequency" => frequencyDemoted(packedLib)
-            case "xor" => Array.emptyLongArray
-            case other => sys.error(s"unknown ordering: $other (xor|frequency)")
-          }
-          val index = new XWideMinimizerIndex(k, m, bcTax, s, demoted)
-          val records = index.makeRecordsPacked(packedLib, salt)
-          index.writeRecords(records, opts("output"), buckets)
-          val n = index.loadRecords(spark, opts("output"), buckets).count()
-          IndexParams.write(spark, IndexParams(k = k, m = m, spaces = s,
-            buckets = buckets,
-            demoted = if (demoted.isEmpty) None else Some(demoted),
-            records = Some(n)), opts("output"), writeDemotionSidecar = false)
-          println(s"index written (extra-wide m=$m, ${index.idLongs}-long " +
-            s"keys, s=$s): $n records")
-        } else if (m > 32) {
-          // wide-minimizer path: two-long keys, spaced seed honored across
-          // the word boundary; built from the 2-bit packed library like the
+        if (m > 32) {
+          // wide-minimizer path: ceil(m/32) = 2..4 long keys up to the
+          // reference's 4-long maximum (m <= 128), spaced seed honored across
+          // word boundaries; built from the 2-bit packed library like the
           // narrow path. Default spacing 0 (the s=7 default is the narrow
           // Kraken 2 convention; no published default exists for wide m).
           val s = opts.getOrElse("s", "0").toInt
           val packedLib = loadPackedLibrary(spark, opts, k)
           // -o frequency at wide m: same sampled demotion as the narrow
-          // path, over canonical two-word m-mers (at m <= 63 the demote flag
-          // rides in a spare hi-word bit; at m = 64 the scanner consults the
-          // demotion set at compare time instead — all wide widths work)
+          // path, over canonical wide m-mers (the demote flag rides in a
+          // spare bit of key word 0, or is compared out of band when that
+          // word is full — every wide width works)
           val demoted = opts.getOrElse("o", "xor") match {
             case "frequency" => frequencyDemoted(packedLib)
             case "xor" => Array.emptyLongArray
@@ -453,7 +426,8 @@ object Main {
             buckets = buckets,
             demoted = if (demoted.isEmpty) None else Some(demoted),
             records = Some(n)), opts("output"), writeDemotionSidecar = false)
-          println(s"index written (wide m=$m, s=$s): $n records")
+          println(s"index written (wide m=$m, ${index.words}-long keys, " +
+            s"s=$s): $n records")
         } else {
           val packedLib = loadPackedLibrary(spark, opts, k)
           // -o frequency: sample the library, demote the most frequent
@@ -538,7 +512,7 @@ object Main {
           // rule, so the auto-pick line carries memory accounting, not just
           // the record heuristic; the measured size prints after the build
           val n = params.records.getOrElse(0L)
-          val predicted = LongTaxonMap.estimatedBytes(n, wide = params.m > 32)
+          val predicted = LongTaxonMap.estimatedBytes(n, params.words)
             .map(b => f", ~${b / 1048576.0}%.1f MB table").getOrElse("")
           println(s"auto in-memory classification ($n records$predicted)")
         }
@@ -923,11 +897,13 @@ object Main {
         val aPath = opts("index"); val bPath = opts("reference")
         val pa = IndexParams.read(spark, aPath)
         val pb = IndexParams.read(spark, bPath)
+        // demotion sets compare as sets: the same m-mers listed in a
+        // different order give the identical ordering
         require(pa.k == pb.k && pa.m == pb.m && pa.spaces == pb.spaces &&
           pa.xorMask == pb.xorMask && pa.canonical == pb.canonical &&
-          java.util.Arrays.equals(
+          FrequencyOrdering.sameDemotionSet(
             pa.demoted.getOrElse(Array.emptyLongArray),
-            pb.demoted.getOrElse(Array.emptyLongArray)),
+            pb.demoted.getOrElse(Array.emptyLongArray), pa.words),
           "mergeIndex needs identical scan parameters on both indexes " +
             s"(k=${pa.k}/${pb.k}, m=${pa.m}/${pb.m}, " +
             s"s=${pa.spaces}/${pb.spaces}, ordering incl. demotion set)")
@@ -939,11 +915,7 @@ object Main {
         val (_, recB) = openKeyed(spark, bPath, pb, bcTax)
         val merged = IndexOps.mergeIndexes(recA, recB, bcTax, idxA.keyCols)
         val outLoc = opts("output")
-        idxA match {
-          case x: XWideMinimizerIndex => x.writeRecords(merged, outLoc, pa.buckets)
-          case w: WideMinimizerIndex => w.writeRecords(merged, outLoc, pa.buckets)
-          case n: MinimizerIndex => n.writeRecords(merged, outLoc)
-        }
+        idxA.writeRecords(merged, outLoc, pa.buckets)
         copyTaxonomy(spark,
           opts.getOrElse("taxonomy", aPath + "/taxonomy"), outLoc)
         val outParams = IndexParams.read(spark, outLoc)
@@ -1009,45 +981,25 @@ object Main {
         def freqArgs = (opts.getOrElse("freq-sample", "1.0").toDouble,
           opts.getOrElse("freq-top", "4096").toInt)
         val rows: Seq[(String, Int, Int, Int, Long)] =
-          if (m > 64) {
-            val demoted =
-              if (!frequency) Array.emptyLongArray
-              else { val (fr, top) = freqArgs
-                FrequencyOrdering.topCanonicalXWideMers(packedLib, m, fr, top) }
-            val sc = new graft.kmers.XWideScanner(k,
-              new graft.kmers.XWidePriority(m, spaces = s, demoted = demoted))
-            libraryFasta(spark, opts).flatMap { f =>
-              graft.kmers.SupermerScanner.splitByAmbiguity(f.nucleotides)
-                .collect { case run if run.valid && run.seq.length >= k =>
-                  val sms = sc.scan(run.seq).toVector
-                  val distinct = sms.map(_.ids.toSeq).distinct
-                  // n-word fold, matching the Python side exactly: per key
-                  // acc = acc * C ^ word from word 0 down (the two-word
-                  // l ^ h*C generalized), wrapping 64-bit multiply
-                  val sum = distinct.foldLeft(0L) { (a, ids) =>
-                    a ^ ids.foldLeft(0L)((acc, w) =>
-                      acc * 0x9e3779b97f4a7c15L ^ w)
-                  }
-                  (f.header, sms.size, sms.map(_.kmers).sum, distinct.size, sum)
-                }
-            }.collect().toSeq
-          } else if (m > 32) {
+          if (m > 32) {
             val demoted =
               if (!frequency) Array.emptyLongArray
               else { val (fr, top) = freqArgs
                 FrequencyOrdering.topCanonicalWideMers(packedLib, m, fr, top) }
-            val sc = new graft.kmers.WideSupermerScanner(k,
-              new graft.kmers.WideRandomXorPriority(m, spaces = s,
-                demoted = demoted))
+            val sc = new graft.kmers.WideScanner(k,
+              new graft.kmers.WidePriority(m, spaces = s, demoted = demoted))
+            val words = sc.words
             libraryFasta(spark, opts).flatMap { f =>
               graft.kmers.SupermerScanner.splitByAmbiguity(f.nucleotides)
                 .collect { case run if run.valid && run.seq.length >= k =>
                   val sms = sc.scan(run.seq).toVector
-                  val distinct = sms.map(sm => (sm.minHi, sm.minLo)).distinct
-                  // two-word fold must match the Python side exactly:
-                  // lo ^ (hi * C) with wrapping 64-bit multiply
-                  val sum = distinct.foldLeft(0L) { case (a, (h, l)) =>
-                    a ^ (l ^ h * 0x9e3779b97f4a7c15L)
+                  val distinct = sms.map(_.ids.take(words)).distinct
+                  // n-word fold, matching the Python side exactly: per key
+                  // acc = acc * C ^ word from word 0 down, wrapping 64-bit
+                  // multiply (at two words: lo ^ hi * C)
+                  val sum = distinct.foldLeft(0L) { (a, ids) =>
+                    a ^ ids.foldLeft(0L)((acc, w) =>
+                      acc * 0x9e3779b97f4a7c15L ^ w)
                   }
                   (f.header, sms.size, sms.map(_.kmers).sum, distinct.size, sum)
                 }

@@ -288,7 +288,7 @@ object Stress {
     * not just the oracle-scale g14 lane. */
   def xclassify(spark: SparkSession): Unit =
     classifyWith(spark, "xclassify",
-      bcTax => new index.XWideMinimizerIndex(104, 96, bcTax))
+      bcTax => new index.WideMinimizerIndex(104, 96, bcTax))
 
   /** CollectAligned at volume: 20M rows -> 1M groups, five parallel
     * primitive columns (100M field values through partial aggregation,

@@ -7,11 +7,12 @@ import graft.taxa.{LcaResolver, Sentinels, Taxonomy}
 
 /** Key-width-independent half of the classification pipeline (spec: reference
   * slacken/Classifier.scala:96-150 — the reference treats minimizer width
-  * uniformly, KmerKeyedIndex.scala:27-55; graft splits the key join by width
-  * but shares everything after it).
+  * uniformly, KmerKeyedIndex.scala:27-55; graft joins on the width's key
+  * columns and shares everything after it).
   *
-  * Both [[MinimizerIndex]] (single-long keys) and [[WideMinimizerIndex]]
-  * (two-long keys) produce, after their span ⋈ records join, rows of
+  * Both [[MinimizerIndex]] (single-long keys, m <= 32) and
+  * [[WideMinimizerIndex]] (2..4 long keys, m in [33, 128]) produce, after
+  * their span ⋈ records join, rows of
   * (title, hit struct(ordinal, taxon, kmers, distinct), seqLen); from there
   * the regroup, the ordinal re-sort, the Kraken hit string and the
   * LCA resolution are identical and live here.

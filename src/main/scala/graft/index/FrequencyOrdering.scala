@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kmers.Dna
+import graft.kmers.{Dna, WidePriority, WideScanner, WideSupermer}
 
 /** Sampled frequency minimizer ordering: find the most frequent canonical
   * m-mers of a library sample and demote them (see
@@ -51,88 +51,21 @@ object FrequencyOrdering {
       .sorted
   }
 
-  /** Every canonical wide m-mer (hi, lo) of a valid segment, rolling two-word
-    * scan with the O(1) canonicalization from [[graft.kmers.WideRandomXorPriority]]. */
-  def canonicalWideMers(seq: CharSequence, m: Int): Iterator[(Long, Long)] = {
-    val hiBases = m - 32
-    val hiMask = Dna.merMask(hiBases)
-    val s = 2 * hiBases
-    var merHi = 0L
-    var merLo = 0L
-    Iterator.range(0, seq.length).flatMap { i =>
-      merHi = ((merHi << 2) | (merLo >>> 62)) & hiMask
-      merLo = (merLo << 2) | Dna.code(seq.charAt(i))
-      if (i < m - 1) Iterator.empty
-      else {
-        val rl = Dna.reverseComplement(merLo, 32)
-        val rh = if (hiBases > 0) Dna.reverseComplement(merHi, hiBases) else 0L
-        val ch = if (s == 0) 0L else rl >>> (64 - s)
-        val cl = (if (s == 64) 0L else rl << s) | rh
-        if (graft.kmers.WideRandomXorPriority.unsignedLess(ch, cl, merHi, merLo))
-          Iterator.single((ch, cl))
-        else Iterator.single((merHi, merLo))
-      }
-    }
-  }
+  /** Every canonical wide (m in [33, 128]) m-mer of a valid segment,
+    * run-length encoded: the wide scanner at k = m with a zero toggle mask,
+    * whose super-mer keys (id1..id<ceil(m/32)>) ARE the canonical m-mers and
+    * whose k-mer counts are the run lengths in positions. */
+  def canonicalWideMers(seq: CharSequence, m: Int): Iterator[WideSupermer] =
+    canonicalScanner(m).scan(seq)
 
-  /** Wide (m in [33, 64]) variant of [[topCanonicalMers]]: the topN most
-    * frequent canonical two-word m-mers, returned as interleaved (hi, lo)
-    * pairs sorted by (hi, lo) — the demotion set of
-    * [[graft.kmers.WideRandomXorPriority]]. */
+  private def canonicalScanner(m: Int): WideScanner =
+    new WideScanner(m, new WidePriority(m, xorMask = 0L))
+
+  /** Wide (m in [33, 128]) variant of [[topCanonicalMers]]: the topN most
+    * frequent canonical `ceil(m/32)`-word m-mers, returned interleaved
+    * (word 0 first) and sorted unsigned word-lexicographically — the
+    * demotion set of [[graft.kmers.WidePriority]]. */
   def topCanonicalWideMers(library: Dataset[(Int, Array[Byte], Int)], m: Int,
-      fraction: Double = 0.2, topN: Int = 4096, seed: Long = 42L): Array[Long] = {
-    val spark = library.sparkSession
-    import spark.implicits._
-    val sampled =
-      if (fraction >= 1.0) library
-      else library.sample(withReplacement = false, fraction, seed)
-    sampled
-      .flatMap { case (_, packed, len) =>
-        canonicalWideMers(new Dna.Packed(packed, len), m)
-      }
-      .toDF("hi", "lo")
-      .groupBy($"hi", $"lo").agg(count(lit(1)).as("n"))
-      .orderBy($"n".desc, $"hi", $"lo")
-      .limit(topN)
-      .select($"hi", $"lo").as[(Long, Long)]
-      .collect()
-      .sorted
-      .flatMap { case (h, l) => Array(h, l) }
-  }
-
-  /** Every canonical extra-wide (m > 64) m-mer of a valid segment as n-word
-    * arrays — the rolling push + O(words^2) canonicalization of
-    * [[graft.kmers.XWidePriority]]. */
-  def canonicalXWideMers(seq: CharSequence, m: Int): Iterator[Array[Long]] = {
-    val pri = new graft.kmers.XWidePriority(m)
-    val words = pri.words
-    val topMask = pri.topMask
-    val mer = new Array[Long](words)
-    val rcBuf = new Array[Long](words)
-    Iterator.range(0, seq.length).flatMap { i =>
-      var w = 0
-      while (w < words - 1) {
-        mer(w) = (mer(w) << 2) | (mer(w + 1) >>> 62)
-        w += 1
-      }
-      mer(0) &= topMask
-      mer(words - 1) = (mer(words - 1) << 2) | Dna.code(seq.charAt(i))
-      if (i < m - 1) Iterator.empty
-      else {
-        pri.reverseComplementInto(mer, rcBuf)
-        val canon =
-          if (graft.kmers.XWidePriority.unsignedLess(rcBuf, mer)) rcBuf else mer
-        Iterator.single(canon.clone())
-      }
-    }
-  }
-
-  /** Extra-wide (m in [65, 128]) variant of [[topCanonicalMers]]: the topN
-    * most frequent canonical n-word m-mers, returned interleaved (word 0
-    * first) sorted word-lexicographically — the demotion set of
-    * [[graft.kmers.XWidePriority]]. Arity-matched columns like every other
-    * extra-wide DataFrame. */
-  def topCanonicalXWideMers(library: Dataset[(Int, Array[Byte], Int)], m: Int,
       fraction: Double = 0.2, topN: Int = 4096, seed: Long = 42L): Array[Long] = {
     val spark = library.sparkSession
     import spark.implicits._
@@ -140,22 +73,30 @@ object FrequencyOrdering {
     val sampled =
       if (fraction >= 1.0) library
       else library.sample(withReplacement = false, fraction, seed)
-    val mers = sampled.flatMap { case (_, packed, len) =>
-      canonicalXWideMers(new Dna.Packed(packed, len), m)
-    }
     val keyCols = (1 to words).map(i => col(s"id$i"))
-    val counted = (words match {
-      case 3 => mers.map(a => (a(0), a(1), a(2))).toDF("id1", "id2", "id3")
-      case 4 => mers.map(a => (a(0), a(1), a(2), a(3)))
-        .toDF("id1", "id2", "id3", "id4")
-    })
-      .groupBy(keyCols: _*).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc +: keyCols: _*)
+    val scanner = canonicalScanner(m)
+    sampled
+      .flatMap { case (_, packed, len) =>
+        scanner.scan(new Dna.Packed(packed, len))
+      }
+      .groupBy(keyCols: _*).agg(sum($"kmers").as("n"))
+      .orderBy($"n".desc +: keyCols: _*)
       .limit(topN)
       .select(keyCols: _*)
       .collect()
       .map(r => Array.tabulate(words)(r.getLong))
-    counted.sortWith(graft.kmers.XWidePriority.unsignedLess).flatten
+      .sortWith(WidePriority.unsignedLess)
+      .flatten
+  }
+
+  /** Demotion sets are sets — the priorities hash them — so two sidecars
+    * listing the same m-mers (`words` longs each) in different orders
+    * describe the same ordering. */
+  def sameDemotionSet(a: Array[Long], b: Array[Long], words: Int): Boolean = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    def sorted(x: Array[Long]): Seq[Seq[Long]] =
+      x.toSeq.grouped(words).toSeq.sorted
+    a.length == b.length && sorted(a) == sorted(b)
   }
 
   /** Width-dispatched entry: the demotion set for any supported m, as the
@@ -169,8 +110,7 @@ object FrequencyOrdering {
     require(m != 32,
       "m=32 unsupported for frequency ordering: the narrow path needs a " +
         "spare demote bit (use m <= 31) and wide keys start at m=33")
-    if (m > 64) topCanonicalXWideMers(library, m, fraction, topN, seed)
-    else if (m > 32) topCanonicalWideMers(library, m, fraction, topN, seed)
+    if (m > 32) topCanonicalWideMers(library, m, fraction, topN, seed)
     else topCanonicalMers(library, m, fraction, topN, seed)
   }
 

@@ -66,7 +66,7 @@ object IndexOps {
     * a pure column expression (bitwise AND per key word) + LCA
     * re-aggregation (spec: P11/A1 respace variant,
     * KeyValueIndex.scala:368-379). Width-generic like [[respaceSpans]]:
-    * [[graft.kmers.XWidePriority.spaceKeepMasks]] yields one untruncated
+    * [[graft.kmers.WidePriority.spaceKeepMasks]] yields one untruncated
     * keep mask per populated key word (leading word first). The all-ones
     * base matters: bits above the populated priority range are zero in
     * plain keys but carry the frequency-ordering DEMOTE flag in
@@ -76,7 +76,7 @@ object IndexOps {
       bcTax: Broadcast[Taxonomy]): DataFrame = {
     require(newSpaces >= params.spaces,
       s"can only widen spacing (${params.spaces} -> $newSpaces)")
-    val masks = graft.kmers.XWidePriority.spaceKeepMasks(params.m, newSpaces)
+    val masks = graft.kmers.WidePriority.spaceKeepMasks(params.m, newSpaces)
     val lcaAgg = udaf(graft.taxa.TaxonLcaAggregator(bcTax))
     val keyed = masks.indices.map(w =>
       col(s"id${w + 1}").bitwiseAND(lit(masks(w))).as(s"id${w + 1}"))
@@ -90,7 +90,7 @@ object IndexOps {
     * the original spacing applied, so ANDing with the wider per-word keep
     * masks makes the join keys consistent with [[respace]]d records —
     * classification against a respaced index without re-extracting spans.
-    * Width-generic over [[KeyedOrdinalSpan]]: [[graft.kmers.XWidePriority
+    * Width-generic over [[KeyedOrdinalSpan]]: [[graft.kmers.WidePriority
     * .spaceKeepMasks]] yields one untruncated keep mask per populated key
     * word (leading word first — the all-ones base preserves an in-band
     * frequency DEMOTE flag at every width); words above the index width
@@ -99,7 +99,7 @@ object IndexOps {
       newSpaces: Int): Dataset[KeyedOrdinalSpan] = {
     require(newSpaces >= params.spaces,
       s"can only widen spacing (${params.spaces} -> $newSpaces)")
-    val masks = graft.kmers.XWidePriority.spaceKeepMasks(params.m, newSpaces)
+    val masks = graft.kmers.WidePriority.spaceKeepMasks(params.m, newSpaces)
     val m1 = masks(0)
     val m2 = if (masks.length > 1) masks(1) else -1L
     val m3 = if (masks.length > 2) masks(2) else -1L

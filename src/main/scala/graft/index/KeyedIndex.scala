@@ -8,18 +8,20 @@ import graft.taxa.Taxonomy
 /** Width-independent face of a minimizer index (spec: the reference treats
   * key width uniformly via idLongs columns, KmerKeyedIndex.scala:27-55).
   *
-  * [[MinimizerIndex]] (single-long keys, m <= 32) and [[WideMinimizerIndex]]
-  * (two-long keys, m in [33, 64]) both expose their span extraction, build
-  * and classification through this trait, so pipelines built on top of an
+  * One narrow and one wide implementation: [[MinimizerIndex]] (single-long
+  * keys, m <= 32) and [[WideMinimizerIndex]] (`ceil(m/32)` = 2..4 long keys,
+  * m in [33, 128]) both expose their span extraction, build and
+  * classification through this trait, so pipelines built on top of an
   * index — two-step dynamic classification, streaming classification,
   * abundance aggregation — work at any key width. Key columns are always a
-  * prefix (id1[, id2]) of the span/record schemas; joins use [[keyCols]].
+  * prefix (id1[, id2, id3, id4]) of the span/record schemas; joins use
+  * [[keyCols]].
   */
 /** A super-mer in width-normalized form: the minimizer as up to four longs
   * (k1 = id1; k2..k4 = id2..id4 where the width uses them, 0 otherwise —
   * matching the reference's idLongs = ceil(m/32) maximum of 4,
   * KmerKeyedIndex.scala:27-55). k3/k4 trail the historical fields so
-  * narrow/wide call sites and consumers stay positional. */
+  * two-word call sites and consumers stay positional. */
 final case class KeyedSupermer(k1: Long, k2: Long, start: Int, kmers: Int,
     k3: Long = 0L, k4: Long = 0L)
 
@@ -54,8 +56,7 @@ trait InMemoryClassifier extends Serializable {
 
 trait KeyedIndex extends Serializable {
 
-  /** Join key columns: Seq("id1") narrow, Seq("id1", "id2") wide,
-    * id1..id3/id1..id4 extra-wide. */
+  /** Join key columns: Seq("id1") narrow, id1..id<ceil(m/32)> wide. */
   def keyCols: Seq[String]
 
   /** k-mer length of this index. */
@@ -64,7 +65,7 @@ trait KeyedIndex extends Serializable {
   def taxonomyOf: Broadcast[Taxonomy]
 
   /** Executor-local super-mer scan of one VALID segment (no ambiguity codes,
-    * length >= k), keys normalized to two longs. Lets key-agnostic kernels
+    * length >= k), keys normalized to four longs. Lets key-agnostic kernels
     * (e.g. the bracken window slide) run at any width. */
   def scanKeyed(segment: CharSequence): Iterator[KeyedSupermer]
 

@@ -27,25 +27,16 @@ final case class KeyedOrdinalSpan(
     id1: Long, id2: Long, id3: Long, id4: Long, distinct: Boolean, kmers: Int,
     flag: Int, ordinal: Int, title: String, seqLen: Int)
 
-/** Broadcastable key -> LCA-taxon lookup for the in-memory classification
-  * path, width-normalized: lookups take four key words (words above the
-  * index width are 0, which round-trips because builds store the same
-  * padding). Implemented by [[LongTaxonMap]] / [[WideTaxonMap]] /
-  * [[XWideTaxonMap]], whose probe loops stay width-specialized. */
-trait KeyTaxonTable extends Serializable {
-  def get(a: Long, b: Long, c: Long, d: Long): Int
-  def byteSize: Long
-}
-
 /** The width-generic minimizer-index pipeline: everything Dataset-level —
   * span extraction protocol, leaf-pair emission, LCA fold, classification
   * join, broadcast in-memory classification, bucketed persistence — written
-  * ONCE over `words` (the number of 64-bit key words, 1..4). Subclasses
-  * ([[MinimizerIndex]], [[WideMinimizerIndex]], [[XWideMinimizerIndex]])
-  * contribute only their executor-local scanner kernel ([[scanKeyed]]),
-  * their broadcast-table builder ([[buildTable]]) and the parameter sidecar
-  * ([[sidecarParams]]) — the m <= 32 / <= 64 / <= 128 specializations stay
-  * where they pay (the scan and probe hot loops), not in the plan.
+  * ONCE over `words` (the number of 64-bit key words, 1..4). The two
+  * subclasses — [[MinimizerIndex]] (one long, m <= 32) and
+  * [[WideMinimizerIndex]] (2..4 longs, m in [33, 128]) — contribute only
+  * their executor-local scanner kernel ([[scanKeyed]]), their
+  * broadcast-table builder ([[buildTable]]) and the parameter sidecar
+  * ([[sidecarParams]]): the narrow/wide split stays where it pays (the scan
+  * and probe hot loops), not in the plan.
   *
   * Scale design (unchanged from the per-width originals it replaces):
   *  - records are bucketed by the key columns so every classification join
@@ -386,13 +377,13 @@ abstract class LongKeyIndex extends KeyedIndex {
     * classifier object, so the classify closures never capture the
     * collected table.
     *
-    * The probe loop is duplicated per concrete table type on purpose: each
-    * branch owns a statically-typed `get` call site on a final class, which
-    * stays monomorphic (and inlinable) even when one JVM exercises several
-    * index widths back-to-back — benchmarks and sweeps would otherwise turn
-    * the shared interface call site megamorphic and slow the zero-shuffle
-    * path the width-specialized originals avoided (ADVICE r13). The type
-    * dispatch itself runs once per fragment, not per span. */
+    * The probe loop is written once per concrete table type on purpose:
+    * each branch owns a statically-typed `get` call site on a final class,
+    * which stays monomorphic (and inlinable) even when one JVM exercises
+    * narrow and wide indexes back-to-back — benchmarks and sweeps would
+    * otherwise turn the shared interface call site megamorphic and slow the
+    * zero-shuffle path (ADVICE r13). The type dispatch itself runs once per
+    * fragment, not per span. */
   private[index] def fragHits(f: InputFragment, tbl: KeyTaxonTable): Vector[TaxonHit] =
     tbl match {
       case t: LongTaxonMap =>
@@ -405,24 +396,6 @@ abstract class LongKeyIndex extends KeyedIndex {
           TaxonHit(s.ordinal, x, s.kmers, s.distinct)
         }.toVector
       case t: WideTaxonMap =>
-        fragmentSpans(f).map { s =>
-          val x = s.flag match {
-            case AMBIGUOUS_FLAG => AMBIGUOUS_SPAN
-            case MATE_PAIR_BORDER_FLAG => MATE_PAIR_BORDER
-            case _ => t.get(s.id1, s.id2, s.id3, s.id4)
-          }
-          TaxonHit(s.ordinal, x, s.kmers, s.distinct)
-        }.toVector
-      case t: XWideTaxonMap =>
-        fragmentSpans(f).map { s =>
-          val x = s.flag match {
-            case AMBIGUOUS_FLAG => AMBIGUOUS_SPAN
-            case MATE_PAIR_BORDER_FLAG => MATE_PAIR_BORDER
-            case _ => t.get(s.id1, s.id2, s.id3, s.id4)
-          }
-          TaxonHit(s.ordinal, x, s.kmers, s.distinct)
-        }.toVector
-      case t =>
         fragmentSpans(f).map { s =>
           val x = s.flag match {
             case AMBIGUOUS_FLAG => AMBIGUOUS_SPAN

@@ -21,6 +21,9 @@ final case class IndexParams(
       * ones whose count was not re-measured. */
     records: Option[Long] = None) {
 
+  /** Key words per minimizer: 1 narrow (m <= 32), ceil(m/32) wide. */
+  def words: Int = (m + 31) / 32
+
   def priority: MinimizerPriority = {
     val base = RandomXorPriority(m, xorMask, canonical)
     val spaced = if (spaces > 0) SpacedSeedPriority(spaces, base) else base

@@ -279,7 +279,7 @@ object GenomicQueries {
       "g14_xwide_classify" -> (() => {
         val ph = collection.mutable.LinkedHashMap.empty[String, Double]
         val bcTax = s.sparkContext.broadcast(starTaxonomy(s, dir))
-        val index = new graft.index.XWideMinimizerIndex(k = 100, m = 96, bcTax)
+        val index = new graft.index.WideMinimizerIndex(k = 100, m = 96, bcTax)
         val records = phased(ph, "records")(
           materializeSorted(index.makeRecords(lib), index.keyCols))
         val reads = phased(ph, "reads")(readsDs(16, 112))
@@ -488,7 +488,7 @@ object GenomicQueries {
     Q("g14_xwide_classify", (s, dir) => {
       import s.implicits._
       val bcTax = s.sparkContext.broadcast(starTaxonomy(s, dir))
-      val index = new graft.index.XWideMinimizerIndex(k = 100, m = 96, bcTax)
+      val index = new graft.index.WideMinimizerIndex(k = 100, m = 96, bcTax)
       val lib = customerGenomes(s, dir).select($"taxon", $"dna").as[(Int, String)]
       val records = index.makeRecords(lib)
       val reads = ordersScan(s, dir)
@@ -539,9 +539,8 @@ object GenomicQueries {
 
     // m=64 frequency-demoted classification: the widest key has no spare
     // bit for the demote flag, so the scanner consults the demotion set at
-    // COMPARE time (the out-of-band rank lane, WideScanner.priorityOf /
-    // priLess) — the one ordering path no other gate query exercises end to
-    // end. topN=65536 demotes ~2/3 of the library's distinct wide mers, so
+    // COMPARE time (the out-of-band rank lane of graft.kmers.WidePriority)
+    // — the one ordering path no other gate query exercises end to end. topN=65536 demotes ~2/3 of the library's distinct wide mers, so
     // demotion genuinely changes which m-mers win windows: a build/classify
     // ordering desync changes the selected keys and fails the golden.
     Q("g13_wide64_freq_classify", (s, dir) => {

@@ -1382,6 +1382,59 @@ class CliSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(e.getMessage.contains("identical scan parameters"))
   }
 
+  test("CLI: mergeIndex compares demotion sets as sets: a reordered " +
+    "sidecar merges, a different set is refused") {
+    spark
+    val dir = Files.createTempDirectory("graft-cli-merge-freq")
+    write(dir.resolve("tax/nodes.dmp"),
+      "1\t|\t1\t|\tno rank\t|\n2\t|\t1\t|\tgenus\t|\n" +
+        "4\t|\t2\t|\tspecies\t|\n")
+    write(dir.resolve("tax/names.dmp"),
+      (Seq(1 -> "root", 2 -> "genus g", 4 -> "s4")
+        .map { case (t, n) => s"$t\t|\t$n\t|\t\t|\tscientific name\t|" }
+        .mkString("", "\n", "\n")))
+    write(dir.resolve("lib.fasta"), s">s4\n${dna(2000)}\n")
+    write(dir.resolve("lib.tsv"), "s4\t4\n")
+    def build(out: String): Unit =
+      Main.main(Array("build", "--k", "50", "--m", "40", "--p", "4",
+        "--o", "frequency", "--freq-sample", "1.0", "--freq-top", "64",
+        "--library", dir.resolve("lib.fasta").toString,
+        "--labels", dir.resolve("lib.tsv").toString,
+        "--taxonomy", dir.resolve("tax").toString,
+        "--output", out))
+    val idxA = dir.resolve("idxA").toString
+    val idxB = dir.resolve("idxB").toString
+    def merge(out: String): Unit =
+      Main.main(Array("mergeIndex", "--index", idxA, "--reference", idxB,
+        "--p", "4", "--output", dir.resolve(out).toString))
+    build(idxA)
+    build(idxB)
+    val demoted = graft.index.IndexParams.read(spark, idxB).demoted.get
+    assert(demoted.length == 2 * 64) // (id1, id2) per demoted m-mer
+    // the same set with its entries listed in reverse order
+    val reordered = demoted.grouped(2).toSeq.reverse.flatten.toArray
+    assert(!reordered.sameElements(demoted))
+    graft.index.FrequencyOrdering.write(spark, idxB, reordered)
+    merge("merged")
+    val bcTax = spark.sparkContext.broadcast(graft.taxa.Taxonomy.fromTuples(
+      Seq((2, 1, "genus", "g"), (4, 2, "species", "s4"))))
+    def recs(path: String): Set[(Long, Long, Int)] = {
+      val p = graft.index.IndexParams.read(spark, path)
+      new graft.index.WideMinimizerIndex(50, 40, bcTax)
+        .loadRecords(spark, path, p.buckets).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    }
+    assert(recs(dir.resolve("merged").toString) == recs(idxA))
+    // a different set is still refused: one entry dropped, or the same
+    // longs regrouped into different (id1, id2) entries
+    for (other <- Seq(reordered.drop(2),
+        demoted.grouped(2).flatMap(_.reverse).toArray)) {
+      graft.index.FrequencyOrdering.write(spark, idxB, other)
+      val e = intercept[IllegalArgumentException](merge("bad"))
+      assert(e.getMessage.contains("identical scan parameters"))
+    }
+  }
+
   test("CLI: curate with an explicit --near-dup-mode but no threshold " +
     "fails loudly instead of silently skipping the pass") {
     import spark.implicits._

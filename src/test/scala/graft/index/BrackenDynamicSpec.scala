@@ -518,7 +518,7 @@ class IndexOpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val ds = spark.createDataset(reads)
     for (idx <- Seq[LongKeyIndex](
         new WideMinimizerIndex(k = 45, m = 33, bcTax),
-        new XWideMinimizerIndex(k = 104, m = 96, bcTax))) {
+        new WideMinimizerIndex(k = 104, m = 96, bcTax))) {
       val records = idx.buildRecords(wideLib).cache()
       val spans = idx.spans(ds).cache()
       val typed = idx.classify(spans, records)

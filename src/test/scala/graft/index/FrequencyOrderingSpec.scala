@@ -78,42 +78,43 @@ class FrequencyOrderingSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("wide demotion: a demoted (hi, lo) m-mer is only chosen without alternatives") {
-    import graft.kmers.{WideRandomXorPriority, WideSupermerScanner}
+    import graft.kmers.{WidePriority, WideScanner}
     val m = 33
     val k = 45
-    val base = new WideSupermerScanner(k, new WideRandomXorPriority(m))
     val seq = dna(600)
     // the scanner emits PRIORITIES; recover the demotable canonical mers by
     // re-scanning every position (the chosen ones are a subset)
-    val chosen = FrequencyOrdering.canonicalWideMers(seq, m).toVector.distinct
+    val chosen = FrequencyOrdering.canonicalWideMers(seq, m)
+      .map(sm => (sm.id1, sm.id2)).toVector.distinct
     // a value-scattered third of the mers: every (k-m+1)-window keeps
     // non-demoted alternatives with overwhelming probability (a positional
     // prefix would demote whole windows and legitimately force demoted picks)
     val demoted = chosen.filter { case (h, l) => ((h ^ l) & 3L) == 0L }
       .sorted.flatMap { case (h, l) => Seq(h, l) }.toArray
     assert(demoted.nonEmpty)
-    val freq = new WideSupermerScanner(k,
-      new WideRandomXorPriority(m, spaces = 0, demoted = demoted))
+    val freq = new WideScanner(k,
+      new WidePriority(m, spaces = 0, demoted = demoted))
     val sms = freq.scan(seq).toVector
     // counts still tile, and no chosen priority carries the demote bit
     // unless a window held nothing else (600 random bases: never)
     assert(sms.map(_.kmers).sum == seq.length - k + 1)
-    assert(sms.forall(_.minHi >= 0L), "a demoted wide m-mer was chosen")
+    assert(sms.forall(_.id1 >= 0L), "a demoted wide m-mer was chosen")
   }
 
   test("wide demotion at m = 64: compare-time membership replaces the stolen bit") {
-    import graft.kmers.{RandomXorPriority, WideRandomXorPriority, WideSupermerScanner}
+    import graft.kmers.{RandomXorPriority, WidePriority, WideScanner}
     val m = 64
     val k = 80
-    val base = new WideSupermerScanner(k, new WideRandomXorPriority(m))
+    val base = new WideScanner(k, new WidePriority(m))
     val seq = dna(800)
-    val chosen = FrequencyOrdering.canonicalWideMers(seq, m).toVector.distinct
+    val chosen = FrequencyOrdering.canonicalWideMers(seq, m)
+      .map(sm => (sm.id1, sm.id2)).toVector.distinct
     // a value-scattered quarter of the mers (see the m=33 test above)
     val demotedPairs = chosen.filter { case (h, l) => ((h ^ l) & 3L) == 0L }
     val demoted = demotedPairs.sorted.flatMap { case (h, l) => Seq(h, l) }.toArray
     assert(demoted.nonEmpty)
-    val freq = new WideSupermerScanner(k,
-      new WideRandomXorPriority(m, spaces = 0, demoted = demoted))
+    val freq = new WideScanner(k,
+      new WidePriority(m, spaces = 0, demoted = demoted))
     val sms = freq.scan(seq).toVector
     assert(sms.map(_.kmers).sum == seq.length - k + 1)
     // at m=64 every hi bit is a priority bit — no demote flag in the value.
@@ -123,12 +124,12 @@ class FrequencyOrderingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val demSet = demotedPairs.toSet
     val mask = RandomXorPriority.DEFAULT_MASK
     for (sm <- sms)
-      assert(!demSet.contains((sm.minHi ^ mask, sm.minLo ^ mask)),
+      assert(!demSet.contains((sm.id1 ^ mask, sm.id2 ^ mask)),
         "a demoted m=64 m-mer was chosen despite alternatives")
     // and demotion really changed selection: the plain xor ordering picks
     // at least one mer from the demotion set on the same sequence
     assert(base.scan(seq).exists(sm =>
-      demSet.contains((sm.minHi ^ mask, sm.minLo ^ mask))))
+      demSet.contains((sm.id1 ^ mask, sm.id2 ^ mask))))
   }
 
   test("wide frequency sampling finds a planted wide motif; sidecar round-trips") {
@@ -144,7 +145,8 @@ class FrequencyOrderingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(top.length == 8) // interleaved (hi, lo) pairs
     val pairs = top.grouped(2).map(a => (a(0), a(1))).toSet
     val enc = FrequencyOrdering.canonicalWideMers(motif * 2, m).next()
-    assert(pairs.contains(enc), "planted wide motif not in the demotion set")
+    assert(pairs.contains((enc.id1, enc.id2)),
+      "planted wide motif not in the demotion set")
     // round-trip through the wide index sidecar
     val dir = java.nio.file.Files.createTempDirectory("graft-widefreq").toString
     IndexParams.write(spark,

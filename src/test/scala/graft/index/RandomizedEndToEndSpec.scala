@@ -143,7 +143,7 @@ class RandomizedEndToEndSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val bcTax = spark.sparkContext.broadcast(tax)
     val params = IndexParams(k = 104, m = 96, spaces = 5, buckets = 4)
-    val index = new XWideMinimizerIndex(104, 96, bcTax, spaces = 5)
+    val index = new WideMinimizerIndex(104, 96, bcTax, spaces = 5)
     val genomes = Map(4 -> dna(2500), 5 -> dna(2500))
     val records = index.makeRecords(spark.createDataset(genomes.toSeq)).cache()
     val respaced = IndexOps.respace(records, params, 12, bcTax).cache()

@@ -31,12 +31,23 @@ class TaxonMapSpec extends AnyFunSuite with PropChecks {
   }
 
   test("WideTaxonMap agrees with Map on hits and misses") {
-    forAll(Gen.listOf(Gen.zip(keyGen, keyGen, Gen.chooseNum(1, 1 << 20)))) { kvs =>
-      val distinct = kvs.map(t => (t._1, t._2) -> t._3).toMap
-      val table = WideTaxonMap(distinct.toArray.map { case ((h, l), v) => (h, l, v) })
-      for (((h, l), v) <- distinct) assert(table.get(h, l) == v)
-      for (((h, l), _) <- distinct; miss = (h, l + 1) if !distinct.contains(miss))
-        assert(table.get(miss._1, miss._2) == Taxonomy.NONE)
-    }
+    for (words <- 2 to 4)
+      forAll(Gen.listOf(Gen.zip(Gen.listOfN(words, keyGen),
+          Gen.chooseNum(1, 1 << 20)))) { kvs =>
+        val distinct = kvs.toMap.toSeq // records are unique per key
+        val table = WideTaxonMap(distinct.flatMap(_._1).toArray,
+          distinct.map(_._2).toArray, words)
+        // probes take four normalized words: 0 above the width
+        def get(key: Seq[Long]): Int = {
+          val p = key.padTo(4, 0L)
+          table.get(p(0), p(1), p(2), p(3))
+        }
+        val keys = distinct.map(_._1).toSet
+        for ((key, v) <- distinct) assert(get(key) == v, s"words=$words")
+        // misses differing in the first or the last stored word
+        for ((key, _) <- distinct; w <- Seq(0, words - 1);
+             miss = key.updated(w, key(w) + 1) if !keys.contains(miss))
+          assert(get(miss) == Taxonomy.NONE, s"words=$words")
+      }
   }
 }

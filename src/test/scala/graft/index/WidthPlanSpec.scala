@@ -44,8 +44,8 @@ class WidthPlanSpec extends AnyFunSuite with SparkSessionTestWrapper {
       new MinimizerIndex(IndexParams(k = 35, m = 31, spaces = 0, buckets = 8),
         bcTax)),
     ("wide m=40 (2 words)", () => new WideMinimizerIndex(50, 40, bcTax)),
-    ("xwide m=96 (3 words)", () => new XWideMinimizerIndex(104, 96, bcTax)),
-    ("xwide m=112 (4 words)", () => new XWideMinimizerIndex(120, 112, bcTax)))
+    ("xwide m=96 (3 words)", () => new WideMinimizerIndex(104, 96, bcTax)),
+    ("xwide m=112 (4 words)", () => new WideMinimizerIndex(120, 112, bcTax)))
 
   for ((label, mkIndex) <- widths)
     test(s"$label: bucketed classify join is one-sided under AQE; " +

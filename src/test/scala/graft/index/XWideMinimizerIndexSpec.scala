@@ -6,7 +6,7 @@ import graft.sources.InputFragment
 import graft.taxa.Taxonomy
 import scala.util.Random
 
-/** End-to-end for the extra-wide (3/4-long key) index: build + classify at
+/** End-to-end for the wide index at 3/4-long keys: build + classify at
   * m = 96 and m = 128, the join path vs the in-memory broadcast table
   * row-identical, bucketed persistence with a one-sided classify join. */
 class XWideMinimizerIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
@@ -45,7 +45,7 @@ class XWideMinimizerIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "on the source taxon or an ancestor, and the in-memory path is " +
       "row-identical to the join path") {
       import spark.implicits._
-      val index = new XWideMinimizerIndex(k, m, bcTax)
+      val index = new WideMinimizerIndex(k, m, bcTax)
       val idLongs = (m + 31) / 32
       val records = index.makeRecords(lib).cache()
       assert(records.columns.toSeq ==
@@ -98,7 +98,7 @@ class XWideMinimizerIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
       new MinimizerIndex(IndexParams(k = 35, m = 31, spaces = 7, buckets = 4),
         bcTax),
       new WideMinimizerIndex(50, 40, bcTax),
-      new XWideMinimizerIndex(104, 96, bcTax))
+      new WideMinimizerIndex(104, 96, bcTax))
     for (idx <- widths) {
       val nk = idx.keyCols.size
       val merged = IndexOps.mergeIndexes(idx.buildRecords(libA),
@@ -115,7 +115,7 @@ class XWideMinimizerIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("width-generic consumers run at idLongs=3: bracken windows and " +
     "missing-genome stats agree with expectations") {
     import spark.implicits._
-    val index = new XWideMinimizerIndex(104, 96, bcTax)
+    val index = new WideMinimizerIndex(104, 96, bcTax)
     val records = index.makeRecords(lib).cache()
     // bracken weights derive source->dest window counts without error and
     // cover all sources

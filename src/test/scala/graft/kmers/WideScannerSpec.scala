@@ -7,76 +7,79 @@ import graft.PropChecks
 class WideScannerSpec extends AnyFunSuite with PropChecks {
   import Gens._
 
-  def decode2(hi: Long, lo: Long, m: Int): String =
-    (if (m > 32) Dna.decode(hi, m - 32) else "") + Dna.decode(lo, 32)
+  /** A string m-mer as its `ceil(m/32)` key words (word 0 first, holding
+    * the leading m - 32*(words-1) bases), via the narrow string encoder. */
+  def words(s: String): Seq[Long] = {
+    val m = s.length
+    val top = m - 32 * ((m + 31) / 32 - 1)
+    Dna.encode(s.substring(0, top)) +: s.substring(top).grouped(32)
+      .map(Dna.encode).toSeq
+  }
 
-  /** Brute-force wide minimizer of the k-mer at offset i. */
-  def bruteMin(seq: String, i: Int, k: Int, p: WideRandomXorPriority): (Long, Long) = {
+  def unsignedLess(a: Seq[Long], b: Seq[Long]): Boolean =
+    WidePriority.unsignedLess(a.toArray, b.toArray)
+
+  /** Priority of one m-mer: the scanner at k = m has exactly one window. */
+  def priorityOf(mer: String, p: WidePriority): Seq[Long] =
+    new WideScanner(p.width, p).scan(mer).next().ids.take(p.words)
+
+  /** Brute-force wide minimizer of every k-mer: per-position priorities,
+    * then the leftmost unsigned-least in each window. */
+  def bruteMins(seq: String, k: Int, p: WidePriority): Seq[Seq[Long]] = {
     val m = p.width
-    val out = new Array[Long](3)
-    var best: (Long, Long, Long) = null
-    var j = i
-    while (j + m <= i + k) {
-      val mer = seq.substring(j, j + m)
-      val hi = Dna.encode(mer.substring(0, m - 32))
-      val lo = Dna.encode(mer.substring(m - 32))
-      p.priorityOf(hi, lo, out)
-      val cand = (out(0), out(1), out(2))
-      if (best == null || WideRandomXorPriority.priLess(
-        cand._1, cand._2, cand._3, best._1, best._2, best._3))
-        best = cand
-      j += 1
-    }
-    (best._1, best._2)
+    val pris = (0 to seq.length - m).map(j => priorityOf(seq.substring(j, j + m), p))
+    (0 to seq.length - k).map(i =>
+      pris.slice(i, i + k - m + 1).reduceLeft((a, b) => if (unsignedLess(b, a)) b else a))
   }
 
   val wideCase: Gen[(String, Int, Int)] = for {
-    m <- Gen.chooseNum(33, 64)
+    m <- Gen.chooseNum(33, 128)
     k <- Gen.chooseNum(m, m + 30)
     s <- dnaString(k, 2 * k + 40)
   } yield (s, m, k)
 
   test("two-word rolling rc matches string reverse complement") {
+    // with a zero toggle mask the priority IS the canonical mer, so both
+    // strands must land on the unsigned-min of the two string encodings
     forAll(Gen.chooseNum(33, 64).flatMap(m => dnaString(m, m))) { s =>
-      val m = s.length
-      val hi = Dna.encode(s.substring(0, m - 32))
-      val lo = Dna.encode(s.substring(m - 32))
-      val (rh, rl) = WideRandomXorPriority.rc(hi, lo, m - 32)
-      assert(decode2(rh, rl, m) == Dna.reverseComplement(s))
+      val p = new WidePriority(s.length, xorMask = 0L)
+      val rc = Dna.reverseComplement(s)
+      val expected = if (unsignedLess(words(rc), words(s))) words(rc) else words(s)
+      assert(priorityOf(s, p) == expected)
+      assert(priorityOf(rc, p) == expected)
     }
   }
 
   test("wide per-kmer minimizer matches brute force; counts sum correctly") {
     forAll(wideCase) { case (s, m, k) =>
-      val p = new WideRandomXorPriority(m)
-      val sc = new WideSupermerScanner(k, p)
+      val p = new WidePriority(m)
+      val sc = new WideScanner(k, p)
       val sms = sc.scan(s).toVector
       assert(sms.map(_.kmers).sum == s.length - k + 1)
-      val perKmer = sms.flatMap(sm => Vector.fill(sm.kmers)((sm.minHi, sm.minLo)))
-      val expected = (0 to s.length - k).map(i => bruteMin(s, i, k, p))
-      assert(perKmer == expected)
+      val perKmer = sms.flatMap(sm => Vector.fill(sm.kmers)(sm.ids.take(p.words)))
+      assert(perKmer == bruteMins(s, k, p))
       for (w <- sms.sliding(2) if sms.size > 1)
-        assert((w(0).minHi, w(0).minLo) != (w(1).minHi, w(1).minLo))
+        assert(w(0).ids != w(1).ids)
     }
   }
 
   test("wide canonical minimizer multiset is reverse-complement invariant") {
     forAll(wideCase) { case (s, m, k) =>
-      val sc = new WideSupermerScanner(k, new WideRandomXorPriority(m))
-      val fwd = sc.scan(s).map(sm => (sm.minHi, sm.minLo)).toVector.sorted
-      val rev = sc.scan(Dna.reverseComplement(s))
-        .map(sm => (sm.minHi, sm.minLo)).toVector.sorted
+      val sc = new WideScanner(k, new WidePriority(m))
+      val fwd = sc.scan(s).map(_.ids).toVector.sortBy(_.mkString(","))
+      val rev = sc.scan(Dna.reverseComplement(s)).map(_.ids).toVector
+        .sortBy(_.mkString(","))
       assert(fwd == rev)
     }
   }
 
   test("wide space masks clear exactly the odd positions, across both words") {
-    for (m <- Seq(33, 40, 64); s <- 0 to m / 2) {
-      val lo = WideRandomXorPriority.spaceMaskLo(s)
-      val hi = WideRandomXorPriority.spaceMaskHi(s) & Dna.merMask(m - 32)
+    for (m <- Seq(33, 40, 64, 65, 96, 97, 128); s <- 0 to m / 2) {
+      val masks = WidePriority.spaceKeepMasks(m, s)
+      val n = masks.length
+      assert(n == (m + 31) / 32)
       def kept(pos: Int): Boolean =
-        if (pos < 32) ((lo >>> (2 * pos)) & 3L) == 3L
-        else ((hi >>> (2 * (pos - 32))) & 3L) == 3L
+        ((masks(n - 1 - pos / 32) >>> (2 * (pos % 32))) & 3L) == 3L
       for (pos <- 0 until m) {
         val spaced = pos % 2 == 1 && pos < 2 * s
         assert(kept(pos) != spaced, s"m=$m s=$s pos=$pos")
@@ -86,21 +89,15 @@ class WideScannerSpec extends AnyFunSuite with PropChecks {
 
   test("spaced wide priority ignores spaced positions, sees kept ones") {
     val spacedCase = for {
-      m <- Gen.chooseNum(33, 64)
+      m <- Gen.chooseNum(33, 128)
       s <- Gen.chooseNum(1, m / 2)
       mer <- dnaString(m, m)
     } yield (m, s, mer)
     forAll(spacedCase) { case (m, s, mer) =>
       // canonical=false isolates the spacing semantics: canonicalization
       // happens before spacing, so a mutation could otherwise flip strands
-      val p = new WideRandomXorPriority(m, canonical = false, spaces = s)
-      val out = new Array[Long](3)
-      def pri(str: String): (Long, Long) = {
-        p.priorityOf(Dna.encode(str.substring(0, m - 32)),
-          Dna.encode(str.substring(m - 32)), out)
-        (out(0), out(1))
-      }
-      val base = pri(mer)
+      val p = new WidePriority(m, canonical = false, spaces = s)
+      val base = priorityOf(mer, p)
       def mutate(pos: Int): String = {
         // position counted from the RIGHT end (bit position), not string index
         val i = m - 1 - pos
@@ -108,25 +105,23 @@ class WideScannerSpec extends AnyFunSuite with PropChecks {
         mer.substring(0, i) + c + mer.substring(i + 1)
       }
       val spacedPos = 2 * (s - 1) + 1 // last spaced position
-      assert(pri(mutate(spacedPos)) == base, "spaced position must not matter")
+      assert(priorityOf(mutate(spacedPos), p) == base,
+        "spaced position must not matter")
       val keptPos = 2 * (s - 1) // even positions are always kept
-      assert(pri(mutate(keptPos)) != base, "kept position must matter")
+      assert(priorityOf(mutate(keptPos), p) != base, "kept position must matter")
     }
   }
 
   test("wide scanner with spacing: counts still tile, fewer distinct keys") {
     forAll(wideCase) { case (s, m, k) =>
       val sp = math.min(7, m / 2)
-      val spaced = new WideSupermerScanner(k, new WideRandomXorPriority(m, spaces = sp))
+      val spaced = new WideScanner(k, new WidePriority(m, spaces = sp))
       val sms = spaced.scan(s).toVector
       assert(sms.map(_.kmers).sum == s.length - k + 1)
       // spacing only masks priority bits: every key has the spaced bits zero
-      val loMask = WideRandomXorPriority.spaceMaskLo(sp)
-      val hiMask = WideRandomXorPriority.spaceMaskHi(sp) & Dna.merMask(m - 32)
-      for (sm <- sms) {
-        assert((sm.minLo & ~loMask) == 0L)
-        assert((sm.minHi & ~hiMask) == 0L)
-      }
+      val keep = WidePriority.spaceKeepMasks(m, sp)
+      for (sm <- sms; (w, mask) <- sm.ids.zip(keep))
+        assert((w & ~mask) == 0L)
     }
   }
 }
@@ -150,9 +145,9 @@ class WideIndexSpec extends AnyFunSuite with graft.SparkSessionTestWrapper {
     val records = index.makeRecords(spark.createDataset(genomes.toSeq)).cache()
     assert(records.columns.toSeq == Seq("id1", "id2", "taxon"))
     assert(records.count() > 0)
-    // distinct (hi, lo) pairs computed locally agree
+    // distinct (id1, id2) pairs computed locally agree
     val local = genomes.values.flatMap(g =>
-      index.scanner.scan(g).map(sm => (sm.minHi, sm.minLo))).toSet
+      index.scanner.scan(g).map(sm => (sm.id1, sm.id2))).toSet
     assert(records.count() == local.size)
 
     val reads = (0 until 100).map { i =>

@@ -2,10 +2,11 @@ package graft.kmers
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The extra-wide (3/4-long) minimizer kernel against an independent BigInt
-  * model: 2m-bit m-mers as arbitrary-precision ints, reverse complement via
-  * the string kernel, XOR with the toggle mask replicated per word — no
-  * shared code with the word-array implementation under test. */
+/** The wide minimizer kernel against an independent BigInt model: 2m-bit
+  * m-mers as arbitrary-precision ints, reverse complement via the string
+  * kernel, XOR with the toggle mask replicated per word — no shared code
+  * with the four-slot implementation under test. Covers every key width
+  * (two, three and four words). */
 class XWideScannerSpec extends AnyFunSuite {
 
   private val BASES = "ACGT"
@@ -73,33 +74,49 @@ class XWideScannerSpec extends AnyFunSuite {
     out.toSeq
   }
 
+  /** (key words, start, kmers) of every super-mer of a scan. */
+  private def scanOf(scanner: WideScanner, seq: String): Seq[(Seq[Long], Int, Int)] =
+    scanner.scan(seq).map(sm => (sm.ids.take(scanner.words), sm.start, sm.kmers))
+      .toSeq
+
   test("n-word reverse complement matches the string kernel at m = 65, 96, " +
     "97, 128") {
+    // with a zero toggle mask the k = m priority IS the canonical mer: the
+    // rolled reverse complement must make both strands land on the
+    // unsigned-min of the two string encodings
     val rng = new scala.util.Random(5)
-    for (m <- Seq(65, 96, 97, 128); _ <- 0 until 20) {
+    for (m <- Seq(65, 96, 97, 128); _ <- 0 until 40) {
       val s = (0 until m).map(_ => BASES(rng.nextInt(4))).mkString
-      val pri = new XWidePriority(m)
-      val src = encodeWords(s, pri.words)
-      val dst = new Array[Long](pri.words)
-      pri.reverseComplementInto(src, dst)
-      assert(dst.toSeq == encodeWords(Dna.reverseComplement(s), pri.words).toSeq,
-        s"RC mismatch at m=$m for $s")
+      val rc = Dna.reverseComplement(s)
+      val scanner = new WideScanner(m, new WidePriority(m, xorMask = 0L))
+      val words = scanner.words
+      val fwd = encodeWords(s, words); val rev = encodeWords(rc, words)
+      val expected = (if (WidePriority.unsignedLess(rev, fwd)) rev else fwd).toSeq
+      assert(scanOf(scanner, s).map(_._1) == Seq(expected),
+        s"canonical mismatch at m=$m for $s")
+      assert(scanOf(scanner, rc).map(_._1) == Seq(expected),
+        s"canonical mismatch at m=$m for the reverse complement of $s")
+    }
+  }
+
+  private def checkModel(m: Int, seed: Int): Unit = {
+    val k = m + 8
+    val scanner = new WideScanner(k, new WidePriority(m))
+    for (trial <- 0 until 15) {
+      val seq = randomDna(k + 3 + (trial * 17) % 120, seed * 100 + trial)
+      assert(scanOf(scanner, seq) == modelSupermers(seq, k, m),
+        s"scan mismatch at m=$m k=$k trial=$trial seq=$seq")
     }
   }
 
   test("scanner super-mers equal the BigInt brute-force model (fuzz at " +
     "m = 65, 96, 97, 128)") {
-    for ((m, seed) <- Seq((65, 1), (96, 2), (97, 3), (128, 4))) {
-      val k = m + 8
-      val scanner = new XWideScanner(k, new XWidePriority(m))
-      for (trial <- 0 until 15) {
-        val seq = randomDna(k + 3 + (trial * 17) % 120, seed * 100 + trial)
-        val got = scanner.scan(seq)
-          .map(sm => (sm.ids.toSeq, sm.start, sm.kmers)).toSeq
-        assert(got == modelSupermers(seq, k, m),
-          s"scan mismatch at m=$m k=$k trial=$trial seq=$seq")
-      }
-    }
+    for ((m, seed) <- Seq((65, 1), (96, 2), (97, 3), (128, 4))) checkModel(m, seed)
+  }
+
+  test("scanner super-mers equal the BigInt brute-force model at two-word " +
+    "widths (m = 33, 40, 63, 64)") {
+    for ((m, seed) <- Seq((33, 5), (40, 6), (63, 7), (64, 8))) checkModel(m, seed)
   }
 
   /** Recover the canonical mer words from a priority (no spacing, no
@@ -120,24 +137,21 @@ class XWideScannerSpec extends AnyFunSuite {
     val m = 96
     val k = 104
     val seq = randomDna(140, 42)
-    val plain = new XWideScanner(k, new XWidePriority(m))
+    val plain = new WideScanner(k, new WidePriority(m))
     val first = plain.scan(seq).toSeq
     assert(first.nonEmpty)
     // demote the most frequent winner (as its CANONICAL mer): the scan must
     // now prefer alternatives wherever the window offers one
     val winner = first.maxBy(_.kmers)
-    val demotedScanner = new XWideScanner(k,
-      new XWidePriority(m, demoted = unxor(winner.ids.toSeq, m)))
+    val demotedScanner = new WideScanner(k,
+      new WidePriority(m, demoted = unxor(winner.ids, m)))
     val second = demotedScanner.scan(seq).toSeq
-    val winnerKmers = second.filter(_.ids.toSeq == winner.ids.toSeq)
-      .map(_.kmers).sum
+    val winnerKmers = second.filter(_.ids == winner.ids).map(_.kmers).sum
     assert(winnerKmers < winner.kmers,
       s"demoted mer still wins $winnerKmers of its former ${winner.kmers} windows")
-    assert(second.map(s => (s.ids.toSeq, s.start, s.kmers)) !=
-      first.map(s => (s.ids.toSeq, s.start, s.kmers)), "demotion changed nothing")
+    assert(second != first, "demotion changed nothing")
     // deterministic: a second scan agrees exactly
-    assert(demotedScanner.scan(seq).toSeq.map(s => (s.ids.toSeq, s.start,
-      s.kmers)) == second.map(s => (s.ids.toSeq, s.start, s.kmers)))
+    assert(demotedScanner.scan(seq).toSeq == second)
     // both scans cover every k-mer slot
     assert(first.map(_.kmers).sum == seq.length - k + 1)
     assert(second.map(_.kmers).sum == seq.length - k + 1)
@@ -148,20 +162,19 @@ class XWideScannerSpec extends AnyFunSuite {
     val m = 65
     val k = 70
     val seq = randomDna(120, 7)
-    val plain = new XWideScanner(k, new XWidePriority(m))
+    val plain = new WideScanner(k, new WidePriority(m))
     val first = plain.scan(seq).toSeq
     val winner = first.maxBy(_.kmers)
-    val dem = new XWideScanner(k,
-      new XWidePriority(m, demoted = unxor(winner.ids.toSeq, m)))
+    val dem = new WideScanner(k,
+      new WidePriority(m, demoted = unxor(winner.ids, m)))
     val second = dem.scan(seq).toSeq
-    assert(second.map(s => (s.ids.toSeq, s.start, s.kmers)) !=
-      first.map(s => (s.ids.toSeq, s.start, s.kmers)), "demotion changed nothing")
+    assert(second != first, "demotion changed nothing")
     // wherever the demoted mer still wins (windows with no alternative),
     // its stored key carries bit 63 of word 0 — and the flagged form is the
     // ONLY form it appears in after demotion
     val demBit = 1L << 63
     val flagged = (winner.ids(0) | demBit, winner.ids(1), winner.ids(2))
-    assert(!second.exists(_.ids.toSeq == winner.ids.toSeq),
+    assert(!second.exists(_.ids == winner.ids),
       "demoted key appeared without the in-band flag")
     val flaggedWins = second.filter(sm =>
       (sm.ids(0), sm.ids(1), sm.ids(2)) == flagged)
@@ -173,16 +186,16 @@ class XWideScannerSpec extends AnyFunSuite {
     val m = 96
     val k = 100
     for (spaces <- Seq(0, 7, 20, 48)) {
-      val scanner = new XWideScanner(k, new XWidePriority(m, spaces = spaces))
+      val scanner = new WideScanner(k, new WidePriority(m, spaces = spaces))
       val seq = randomDna(150, 100 + spaces)
       val sms = scanner.scan(seq).toSeq
       assert(sms.map(_.kmers).sum == seq.length - k + 1)
     }
     // differing spaces genuinely change the selection
-    val a = new XWideScanner(k, new XWidePriority(m))
-      .scan(randomDna(150, 9)).toSeq.map(_.ids.toSeq)
-    val b = new XWideScanner(k, new XWidePriority(m, spaces = 20))
-      .scan(randomDna(150, 9)).toSeq.map(_.ids.toSeq)
+    val a = new WideScanner(k, new WidePriority(m))
+      .scan(randomDna(150, 9)).toSeq.map(_.ids)
+    val b = new WideScanner(k, new WidePriority(m, spaces = 20))
+      .scan(randomDna(150, 9)).toSeq.map(_.ids)
     assert(a != b)
   }
 }

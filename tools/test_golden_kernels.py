@@ -176,8 +176,8 @@ def wide_freq_stats(seqs, k, m, top_n):
 
 def xwide_stats_at(k, m, seqs=None, top_n=None):
     """From-scratch extra-wide (m > 64: 3/4-word) kernel at arbitrary (k, m)
-    — an independent check of the XWideScanner. Mask replicated per word
-    with the top word truncated to its populated bits; checksum folds each
+    — an independent check of the WideScanner at 3/4 words. Mask replicated
+    per word with the top word truncated to its populated bits; checksum folds each
     distinct key's words top-down as acc = acc*MIX ^ word (the two-word
     l ^ hi*MIX generalized). With seqs/top_n set, adds frequency demotion:
     in-band (bit 63 of word 0) when the top word has a spare bit
