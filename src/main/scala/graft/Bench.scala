@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SessionTuning(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -16,6 +17,18 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // scheduler roll-up per lane rep, staged classify rep, pipeline and
+    // streaming lane (see RunLedger; the timed regions sit inside measure)
+    val ledger = RunLedger.attach(spark)
+    type Ledgers = collection.mutable.LinkedHashMap[String, RunLedger.Window]
+    def measured[T](into: Ledgers, name: String)(body: => T): T = {
+      val (out, w) = ledger.measure(body)
+      into(name) = into.getOrElse(name, RunLedger.EmptyWindow) ++ w
+      out
+    }
+    def ledgerJson(ls: Iterable[(String, RunLedger.Window)]): String =
+      ls.map { case (k, w) => "\"" + k + "\":" + w.toJson }
+        .mkString("{", ",", "}")
 
     // full materialization through a noop sink: unlike count(), this cannot
     // be satisfied by column pruning / partial aggregation shortcuts
@@ -70,17 +83,40 @@ object Bench {
     // so it is stamped for analysis, not used for normalization.
     val canaryBwGbps = HostCanary.measureBandwidth()
 
+    // Host fingerprint: canaries only rescale speed, so a delta against an
+    // anchor from another machine (core count, memory, CPU model) is not
+    // a regression signal — normalization below requires an identical one.
+    val host: (Int, Long, String) = {
+      def procLine(file: String, key: String): Option[String] =
+        try {
+          val src = scala.io.Source.fromFile(file)
+          try src.getLines().find(_.startsWith(key))
+            .map(_.split(":", 2)(1).trim)
+          finally src.close()
+        } catch { case _: Throwable => None }
+      (Runtime.getRuntime.availableProcessors,
+        procLine("/proc/meminfo", "MemTotal").map(_.split("\\s+")(0).toLong)
+          .getOrElse(-1L),
+        procLine("/proc/cpuinfo", "model name").getOrElse("unknown"))
+    }
+    def jsonStr(v: String): String =
+      "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val hostJson = s"""{"nproc":${host._1},"mem_total_kb":${host._2}""" +
+      s""","cpu_model":${jsonStr(host._3)}}"""
+
     // Canary-normalized round-over-round deltas (r19, closing the r18
     // loop): parse the previous round's artifact (the driver's wrapper or
     // a raw Bench line), divide this run's per-lane stat by the canary
     // ratio, and ALERT on lanes that still moved >15%. The anchor's
     // compact driver line only carries medians; when a full artifact (with
     // queries_min) is given via SPARK_GRAFT_BENCH_ANCHOR, mins are used —
-    // anchor_stat records which. Unreadable/absent anchor -> fields omitted.
+    // anchor_stat records which. An anchor that is unreadable, from another
+    // scale factor or from another host is skipped, and anchor_skipped
+    // says why.
     val anchorPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "BENCH_r19.json")
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "BENCH_r23.json")
     // (st canary, mt canary if the anchor has one, per-lane stats, stat name)
-    val anchor: Option[(Double, Option[Double], Map[String, Double], String)] = try {
+    val anchor: Either[String, (Double, Option[Double], Map[String, Double], String)] = try {
       import org.json4s._
       val j0 = jackson.JsonMethods.parse(new java.io.File(anchorPath))
       // the driver wraps the parsed line under "parsed"
@@ -110,11 +146,23 @@ object Bench {
       // normalized against an sf0.1 anchor would read as a 50x regression
       val anchorSf = j \ "sf" match { case JString(s) => s; case _ => "" }
       val thisSf = sfDir.replaceAll(".*sf", "")
-      c.filter(_ > 0).filter(_ => stats.nonEmpty && anchorSf == thisSf)
-        .map((_, cMt, stats, statName))
+      val anchorHost = (j \ "host" \ "nproc", j \ "host" \ "mem_total_kb",
+        j \ "host" \ "cpu_model") match {
+        case (JInt(n), JInt(kb), JString(cpu)) => Some((n.toInt, kb.toLong, cpu))
+        case _ => None
+      }
+      (c.filter(_ > 0), anchorHost) match {
+        case (None, _) => Left(s"$anchorPath has no canary_sec")
+        case _ if stats.isEmpty => Left(s"$anchorPath has no per-lane stats")
+        case _ if anchorSf != thisSf =>
+          Left(s"$anchorPath is sf$anchorSf, this run is sf$thisSf")
+        case (_, None) => Left(s"$anchorPath has no host fingerprint")
+        case (_, Some(h)) if h != host => Left(s"$anchorPath host " +
+          s"(${h._1} cpus, ${h._2} kB, ${h._3}) differs from this host")
+        case (Some(cs), _) => Right((cs, cMt, stats, statName))
+      }
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] anchor $anchorPath unreadable: $e")
-      None
+      Left(s"$anchorPath unreadable: ${e.getClass.getSimpleName}")
     }
 
     // one untimed warm-up action to JIT/codegen and prime the FS cache
@@ -150,23 +198,13 @@ object Bench {
     // 22 s against a true 2.6 s). One rep >3x the rep min is rerun ONCE
     // and appended — the raw reps stay in reps_sec for forensics, and the
     // min stat cannot be inflated by a second spike.
-    def timeReps(thunk: () => Unit): IndexedSeq[Double] = {
-      var times = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        thunk()
-        (System.nanoTime() - t0) / 1e9
-      }
+    def timeReps(rep: () => Double): IndexedSeq[Double] = {
+      var times = (0 until reps).map(_ => rep())
       // variance hygiene (r11 verdict): sub-second lanes get extra reps
-      while (times.nonEmpty && times.min < 1.0 && times.length < subSecondReps) {
-        val t0 = System.nanoTime()
-        thunk()
-        times = times :+ (System.nanoTime() - t0) / 1e9
-      }
-      if (times.nonEmpty && times.max > 3 * times.min) {
-        val t0 = System.nanoTime()
-        thunk()
-        times :+ (System.nanoTime() - t0) / 1e9
-      } else times
+      while (times.nonEmpty && times.min < 1.0 && times.length < subSecondReps)
+        times = times :+ rep()
+      if (times.nonEmpty && times.max > 3 * times.min) times :+ rep()
+      else times
     }
 
     // Headline lanes run INTERLEAVED in randomized order (r13 verdict ask
@@ -215,6 +253,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val repTimes = collection.mutable.Map.empty[String, IndexedSeq[Double]]
+    val laneLedgers: Ledgers = collection.mutable.LinkedHashMap.empty
     val failedLanes = collection.mutable.Set.empty[String]
     // High-IQR lanes (r14: t37 reps 9.76/4.27/3.43 — IQR 6.33 s against a
     // 3.43 s min, pure in-lane warmup of the contraction loop; r15 sf1.0:
@@ -236,7 +275,7 @@ object Bench {
       regate()
       try repTimes(name) =
         repTimes.getOrElse(name, IndexedSeq.empty) :+
-          timeOne(() => run(q.fn(spark, sfDir)))
+          measured(laneLedgers, name)(timeOne(() => run(q.fn(spark, sfDir))))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: $e")
         e.printStackTrace()
@@ -252,11 +291,13 @@ object Bench {
         while (times.nonEmpty && times.min < 1.0 &&
             times.length < subSecondReps) {
           regate()
-          times = times :+ timeOne(() => run(q.fn(spark, sfDir)))
+          times = times :+ measured(laneLedgers, name)(
+            timeOne(() => run(q.fn(spark, sfDir))))
         }
         if (times.nonEmpty && times.max > 3 * times.min) {
           regate()
-          times = times :+ timeOne(() => run(q.fn(spark, sfDir)))
+          times = times :+ measured(laneLedgers, name)(
+            timeOne(() => run(q.fn(spark, sfDir))))
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED in top-up: $e")
@@ -286,6 +327,7 @@ object Bench {
     case class StagedResult(build: Double, classifyMed: Double,
       classifyMin: Double, buildRetries: Int, load1Start: Double,
       load1End: Double, phases: Map[String, Double] = Map.empty)
+    val stageLedgers: Ledgers = collection.mutable.LinkedHashMap.empty
     val stages = graft.operators.GenomicQueries.stagedBench(spark, sfDir)
       .filter { case (name, _) => selected(name) }.map {
       case (name, prepare) =>
@@ -312,7 +354,8 @@ object Bench {
           // persisted records/reads (and broadcasts) into the next entries'
           // timings — the isolation is the whole point of the staged bench
           val times =
-            try timeReps(() => run(staged.classify()))
+            try timeReps(() => measured(stageLedgers, name)(
+              timeOne(() => run(staged.classify()))))
             finally staged.cleanup()
           val sorted = times.sorted
           name -> StagedResult(buildSec, sorted(sorted.length / 2),
@@ -333,13 +376,13 @@ object Bench {
     // by design (it is a multi-minute-at-scale composed job, not a
     // per-query microbench); the surrounding loadavg stamps flag a
     // poisoned number.
+    val pipelineLedgers: Ledgers = collection.mutable.LinkedHashMap.empty
     def timePipeline(name: String, cli: java.nio.file.Path => Array[String])
         : (String, Double) = {
       val out = java.nio.file.Files.createTempDirectory(s"graft-bench-$name")
       try {
-        val t0 = System.nanoTime()
-        graft.Main.main(cli(out))
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> measured(pipelineLedgers, name)(
+          timeOne(() => graft.Main.main(cli(out))))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name pipeline FAILED: $e")
         e.printStackTrace()
@@ -427,8 +470,8 @@ object Bench {
     // selection passed INTO run: a lane deselected by
     // SPARK_GRAFT_BENCH_ONLY never executes (no index build, no ANN
     // train, no micro-batches) — same contract as the other sections
-    val streamLanes =
-      graft.operators.StreamingBench.run(spark, sfDir, selected = selected)
+    val streamLanes = graft.operators.StreamingBench.run(spark, sfDir,
+      ledger, selected = selected)
     val streamingFailed = streamLanes.count(_._2.medianSec < 0)
     val pipelinesAll: Map[String, Double] = pipelines ++
       streamLanes.map { case (k, l) => s"${k}_batch" -> l.medianSec }
@@ -503,7 +546,7 @@ object Bench {
     // alert list used. The PRE-run canary is the ratio's numerator — the
     // anchor's stamp was pre-run too, so the units match; the post stamp
     // covers intra-run drift separately.
-    val anchorCmp: Option[(Double, Option[Double], String,
+    val anchorCmp: Either[String, (Double, Option[Double], String,
         Seq[(String, Double)], Seq[(String, Double)], Seq[String])] =
       anchor.map { case (aCanary, aCanaryMt, aStats, statName) =>
         val ratioSt = canarySec / aCanary
@@ -536,7 +579,7 @@ object Bench {
           ""","normalized_deltas_st":""" + dmap(deltasSt) +
           ""","normalized_alerts":""" +
           alerts.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }.getOrElse("")
+    }.fold(reason => ",\"anchor_skipped\":" + jsonStr(reason), identity)
     // Artifact-key semantics (r20, verdict ask #1a): "value"/"queries"/
     // "value_pre_r6_set" now carry MIN-OF-REPS — the r19 headline median
     // was driven by one 76.9 s host stall on an untouched lane, and the
@@ -618,8 +661,19 @@ object Bench {
         ",\"batches\":" + l.batches +
         ",\"batch_median\":" + num(l.medianSec) +
         ",\"batch_min\":" + num(l.minSec) +
-        ",\"reps_sec\":" + l.repsSec.map(num).mkString("[", ",", "]") + "}"
+        ",\"reps_sec\":" + l.repsSec.map(num).mkString("[", ",", "]") +
+        // jobs per fed trigger (one processAllAvailable), whatever number
+        // of micro-batches it ran
+        ",\"jobs_per_trigger\":" +
+        num(l.ledger.jobsByBatch.sum.toDouble / math.max(l.batches, 1)) + "}"
     }.mkString("{", ",", "}")
+    // scheduler roll-ups: headline lanes over their timed reps, staged
+    // classify reps, pipelines and streaming triggers
+    val ledgerOut = "{\"queries\":" + ledgerJson(laneLedgers) +
+      ",\"stages\":" + ledgerJson(stageLedgers) +
+      ",\"pipelines\":" + ledgerJson(pipelineLedgers) +
+      ",\"streaming\":" + ledgerJson(streamLanes.map { case (k, l) =>
+        k -> l.ledger }) + "}"
     val pipelinesJson = pipelinesAll.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + num(v)
     }.mkString("{", ",", "}")
@@ -640,7 +694,7 @@ object Bench {
     // r9 and — since the r20 headline flip — ALSO under "value"/"queries"
     // (headline_stat:"min"); medians live in value_median/queries_median.
     // Compare min keys across rounds, judged against queries_iqr.
-    val json = s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","round_over_round_stat":"min","value_min":${num(totalMin)},"value_median":${num(totalMedian)},"value_pre_r6_set":${num(comparableMin)},"value_pre_r6_set_min":${num(comparableMin)},"value_pre_r6_set_median":${num(comparable)},"added_queries":$addedJson,"failed":$failed,"failed_stages":$stagesFailed,"failed_pipelines":$pipelinesFailed,"failed_streaming":$streamingFailed,"reps":$reps,"subsec_reps":$subSecondReps,"queries":$qs,"queries_min":$qsMin,"queries_median":$qsMedian,"queries_iqr":$qsIqr,"stages":$stagesJson,"pipelines":$pipelinesJson,"streaming":$streamingJson,"rewrite_ab":$rewriteJson,"reps_sec":$qsReps,"load_gated":$gated,"load_gate_waited_s":${num(gateWaitedS)},"lane_order":"interleaved_shuffled","order_seed":$orderSeed,"regate_waits":$regateWaits,"regate_waited_s":${num(regateWaitedS)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_sec_post":${num(canarySecPost)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps_post":${num(canaryBwGbpsPost)},"canary_drift_alert":$canaryDriftAlert$canaryCmp,"sf":"$sf"}"""
+    val json = s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","round_over_round_stat":"min","value_min":${num(totalMin)},"value_median":${num(totalMedian)},"value_pre_r6_set":${num(comparableMin)},"value_pre_r6_set_min":${num(comparableMin)},"value_pre_r6_set_median":${num(comparable)},"added_queries":$addedJson,"failed":$failed,"failed_stages":$stagesFailed,"failed_pipelines":$pipelinesFailed,"failed_streaming":$streamingFailed,"reps":$reps,"subsec_reps":$subSecondReps,"queries":$qs,"queries_min":$qsMin,"queries_median":$qsMedian,"queries_iqr":$qsIqr,"stages":$stagesJson,"pipelines":$pipelinesJson,"streaming":$streamingJson,"rewrite_ab":$rewriteJson,"reps_sec":$qsReps,"load_gated":$gated,"load_gate_waited_s":${num(gateWaitedS)},"lane_order":"interleaved_shuffled","order_seed":$orderSeed,"regate_waits":$regateWaits,"regate_waited_s":${num(regateWaitedS)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_sec_post":${num(canarySecPost)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps_post":${num(canaryBwGbpsPost)},"canary_drift_alert":$canaryDriftAlert$canaryCmp,"ledger":$ledgerOut,"host":$hostJson,"sf":"$sf"}"""
     println(json)
     // Sidecar copy with no sbt [info] prefix noise, so harnesses that tail
     // stdout through sbt can still parse the metric line.
@@ -673,10 +727,10 @@ object Bench {
           s""","normalization_canary":"${
             if (aCanaryMt.isDefined) "mt" else "st"}"""" +
           s""","anchor_stat":"$statName","normalized_alerts_n":${alerts.length}"""
-    }.getOrElse("")
-    val compact = s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","value_median":${num(totalMedian)},"failed":$failed,"reps":$reps,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_drift_alert":$canaryDriftAlert$canaryBrief,"queries":$qs,"sf":"$sf"}"""
+    }.fold(reason => ",\"anchor_skipped\":" + jsonStr(reason), identity)
+    val compact = s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","value_median":${num(totalMedian)},"failed":$failed,"reps":$reps,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_drift_alert":$canaryDriftAlert$canaryBrief,"queries":$qs,"host":$hostJson,"sf":"$sf"}"""
     println(if (compact.length <= 1800) compact
-      else s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","value_median":${num(totalMedian)},"failed":$failed,"reps":$reps,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_drift_alert":$canaryDriftAlert$canaryBrief,"sf":"$sf"}""")
+      else s"""{"metric":"total","value":${num(totalMin)},"unit":"sec","headline_stat":"min","value_median":${num(totalMedian)},"failed":$failed,"reps":$reps,"canary_sec":${num(canarySec)},"canary_mt_sec":${num(canaryMtSec)},"canary_mt_sec_post":${num(canaryMtSecPost)},"canary_bw_gbps":${num(canaryBwGbps)},"canary_drift_alert":$canaryDriftAlert$canaryBrief,"host":$hostJson,"sf":"$sf"}""")
     spark.stop()
   }
 }

@@ -23,8 +23,9 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -269,11 +269,15 @@ object GraftFunctions {
     "gram_digests" -> (es =>
       GramDigests(Cast(es(0), ArrayType(StringType)), int(es(1)))))
 
-  /** Register as temp functions on an existing session. */
-  def register(spark: SparkSession): Unit =
-    for ((name, builder) <- all)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+  /** Register as temp functions on an existing session, once: the builders
+    * take no parameters, so a name already present (an earlier call, or
+    * [[GraftExtensions]]) is kept rather than replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, builder) <- all
+         if !registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 }
 
 /** Session-extension entry point: built-in registration at session build

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -114,12 +114,15 @@ case class TaxonCountsAggregate(
 object TaxonCountsAggregate {
   val Name = "taxon_counts"
 
-  /** Register `taxon_counts(taxon, kmers)` once per session (idempotent —
-    * createOrReplace, no per-call state). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, es => TaxonCountsAggregate(es(0), es(1)).toAggregateExpression(),
-      "built-in")
+  /** Register `taxon_counts(taxon, kmers)` once per session: the builder
+    * takes no parameters, so a later call keeps the existing entry. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(Name)))
+      registry.createOrReplaceTempFunction(Name,
+        es => TaxonCountsAggregate(es(0), es(1)).toAggregateExpression(),
+        "built-in")
+  }
 
   def taxonCounts(taxon: Column, kmers: Column): Column =
     call_function(Name, taxon, kmers)

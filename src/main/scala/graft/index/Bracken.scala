@@ -195,8 +195,8 @@ final class Bracken(val index: KeyedIndex, bcTax: Broadcast[Taxonomy]) extends S
     *  - PRIMITIVE-ARRAY COLLECT: the per-fragment minimizer->LCA map rides
     *    the shuffle as parallel Array[Long]/Array[Int] columns (a memcopy
     *    through the Tungsten array codec), not a Seq[tuple5] whose decoder
-    *    boxes five fields per element (the measured 170 s hotspot:
-    *    BrackenProfile, 165M boxed elements at the 64x tier). Since r17 the
+    *    boxes five fields per element (the measured 170 s hotspot of a
+    *    172 s stage: 165M boxed elements at the 64x tier). Since r17 the
     *    five arrays come from ONE CollectAligned aggregate, so their
     *    index-alignment is structural rather than an artifact of Spark's
     *    cross-aggregate row-order behavior. */
@@ -212,13 +212,13 @@ final class Bracken(val index: KeyedIndex, bcTax: Broadcast[Taxonomy]) extends S
     // pre-dedup frame instead would be plan-prettier (one groupBy subtree)
     // but pushes the duplicate entries into the LCA join + collect and the
     // per-fragment map builds — measured 23.3 s vs 4.6 s at the 64x tier
-    // (BrackenProfile). The subtree runs TWICE at runtime — column pruning
-    // gives the two consumers different aggregate shapes (first(taxon)+
-    // first(seq)+count vs first(seq) only), so the exchange is NOT
-    // reusable (verified: tools/WeightsPlanProbe, 0 ReusedExchange nodes
-    // in the executed plan). The duplicate cheap payload shuffle is still
-    // a net win vs scanning the pre-dedup frame; PlanBudgetSpec's g05
-    // budget (6 exchanges) documents the same.
+    // (r16 stage profile). The subtree runs TWICE at runtime — column
+    // pruning gives the two consumers different aggregate shapes
+    // (first(taxon)+first(seq)+count vs first(seq) only), so the exchange
+    // is NOT reusable (verified r16 on the sf0.001 g05 lane: 0
+    // ReusedExchange nodes in the final adaptive plan). The duplicate
+    // cheap payload shuffle is still a net win vs scanning the pre-dedup
+    // frame; PlanBudgetSpec's g05 budget (6 exchanges) documents the same.
     val fragsU = frags.groupBy($"header", $"location")
       .agg(first($"taxon").as("taxon"), first($"seq").as("seq"),
         count(lit(1)).as("weight"))

@@ -4,6 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.RunLedger
 import graft.sources.InputFragment
 import graft.taxa.Taxonomy
 
@@ -204,9 +205,11 @@ final class DynamicClassifier(val index: KeyedIndex, bcTax: Broadcast[Taxonomy])
         // criterion counts first-pass reads at the same thresholds the final
         // pass uses (and classify2MultiSample on one sample stays equivalent);
         // initConfidence overrides the first-pass confidence only
-        val ev = evidence(spans, staticRecords, criterion,
-          initConfidence.getOrElse(confidence),
-          minHitGroups).as[(Int, Long)].collect()
+        val ev = RunLedger.phase(spark, "evidence") {
+          evidence(spans, staticRecords, criterion,
+            initConfidence.getOrElse(confidence),
+            minHitGroups).as[(Int, Long)].collect()
+        }
         selectTaxaBase(ev, rank, threshold)
     }
     val taxa: collection.BitSet =
@@ -256,7 +259,12 @@ final class DynamicClassifier(val index: KeyedIndex, bcTax: Broadcast[Taxonomy])
     *    leaf pairs);
     *  - classification is ONE left join on (grp, key...) — each read meets
     *    exactly its own sample's records. No per-sample scans, joins or
-    *    driver loops anywhere in the distributed path. */
+    *    driver loops anywhere in the distributed path.
+    *
+    * The two actions submitted here run under the `sample_enum` and
+    * `evidence` [[RunLedger]] phases; the sub-index fold and the final
+    * classification have no action of their own — they run fused in the
+    * caller's action on the returned dataset. */
   def classify2MultiSample(reads: Dataset[InputFragment], sampleRegex: String,
       library: Dataset[(Int, String)], staticRecords: DataFrame,
       criterion: TaxonCriterion = DistinctMinimizers,
@@ -286,15 +294,16 @@ final class DynamicClassifier(val index: KeyedIndex, bcTax: Broadcast[Taxonomy])
     // later selection — would degenerate into per-read driver state. Samples
     // enumerate from the spans, not the evidence, so a sample whose reads
     // hit nothing still gets an (empty) selection and a result.
-    val samples = spans.select(col("sample")).distinct()
-      .as[String].collect()
+    val samples = RunLedger.phase(spark, "sample_enum") {
+      spans.select(col("sample")).distinct().as[String].collect()
+    }
     require(samples.length <= 100000,
       s"sample regex '$sampleRegex' yields ${samples.length} distinct " +
         "samples — per-sample selection needs a regex that groups reads " +
         "into samples, not one per read")
 
     // one evidence aggregation for every sample at once
-    val ev: Array[(String, Int, Long)] = (criterion match {
+    val evidenceDf = criterion match {
       case TotalMinimizers =>
         // per-(sample, key) Σkmers BEFORE the join — see the single-sample
         // evidence note (sum of sums; the join ships pre-aggregated rows)
@@ -326,7 +335,10 @@ final class DynamicClassifier(val index: KeyedIndex, bcTax: Broadcast[Taxonomy])
           .groupBy(regexp_extract(col("title"), sampleRegex, 1).as("sample"),
             col("taxon"))
           .agg(count(lit(1)).cast("long").as("count"))
-    }).as[(String, Int, Long)].collect()
+    }
+    val ev = RunLedger.phase(spark, "evidence") {
+      evidenceDf.as[(String, Int, Long)].collect()
+    }
 
     // driver-side per-sample selection on the collected evidence (small)
     val bySample = ev.groupBy(_._1)

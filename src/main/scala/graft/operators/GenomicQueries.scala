@@ -418,10 +418,9 @@ object GenomicQueries {
     // per-sample two-step classification: sample = order priority class,
     // each sample's reads drawn from a DIFFERENT nation slice (nation % 5 =
     // priority digit - 1) so every sample earns its own taxon selection and
-    // tailored sub-index — all in one distributed pass.
-    // NOTE: graft.tools.G10Profile replicates this lane's derivations
-    // verbatim for per-phase timing — keep the two in sync when changing
-    // the filter, substring window, params, or selection arguments.
+    // tailored sub-index — all in one distributed pass. Its phase split
+    // comes from the Bench run ledger: DynamicClassifier labels its own
+    // sample_enum and evidence jobs.
     Q("g10_multisample_classify2", (s, dir) => {
       import s.implicits._
       val bcTax = s.sparkContext.broadcast(starTaxonomy(s, dir))

@@ -269,7 +269,7 @@ object PipelineQueries {
        |)""".stripMargin
   }
 
-  // NO scan fan-out here (r21 A/B, LaneProfile): these loaders feed lanes
+  // NO scan fan-out here (r21 per-lane A/B): these loaders feed lanes
   // whose per-row kernels are cheap relative to the 32-task stage overhead
   // the extra exchange costs on the local single-row-group inputs —
   // measured fanout-off/on wall ratios t06 0.89, v04 0.65, v07 0.64,

@@ -66,7 +66,9 @@ object Q {
   def fanOut(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     // A/B toggle (spark.graft.fanout=false disables every call site) so the
     // per-lane win/loss of the fan-out exchange is measurable in isolation
-    // (LaneProfile SPARK_GRAFT_EXTRA_CONF) — the r21 bench showed the
+    // (`java -Dspark.graft.fanout=false ... graft.Bench`: SparkConf loads
+    // spark.* JVM properties; compare the two runs' ledgers) — the r21
+    // bench showed the
     // exchange LOSES on lanes whose pre-exchange kernel is cheap. Parsed
     // defensively (r22, ADVICE): anything but an explicit "false" keeps the
     // probe enabled instead of throwing from inside plan construction.

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
+import graft.RunLedger
 import graft.index.{IndexParams, MinimizerIndex}
 import graft.sources.InputFragment
 import graft.streaming.{StreamingClassifier, StreamingDedup}
@@ -19,34 +21,46 @@ import graft.streaming.{StreamingClassifier, StreamingDedup}
   * OUTSIDE the clock — these lanes measure the per-trigger serving cost,
   * the number an online deployment provisions against. The first batch
   * carries stream start + plan compilation; the median damps it and the
-  * min approximates the steady state.
+  * min approximates the steady state. The trigger loop runs inside a
+  * [[graft.RunLedger]] window, which groups its jobs per micro-batch.
   */
 object StreamingBench {
 
-  /** One lane's result: per-micro-batch wall seconds at the pinned rate. */
+  /** One lane's result: per-micro-batch wall seconds at the pinned rate and
+    * the ledger window of its triggers. */
   case class Lane(rowsPerBatch: Int, batches: Int, medianSec: Double,
-      minSec: Double, repsSec: Seq[Double])
+      minSec: Double, repsSec: Seq[Double], ledger: RunLedger.Window)
 
-  private def stats(rowsPerBatch: Int, times: Seq[Double]): Lane = {
+  /** Times `batches` triggers, each fed by `feed(b)` and drained by
+    * `processAllAvailable()`. */
+  private def triggers(ledger: RunLedger, query: StreamingQuery,
+      rowsPerBatch: Int, batches: Int)(feed: Int => Unit): Lane = {
+    val (times, window) = ledger.measure((0 until batches).map { b =>
+      feed(b)
+      val t0 = System.nanoTime()
+      query.processAllAvailable()
+      (System.nanoTime() - t0) / 1e9
+    })
     val s = times.sorted
-    Lane(rowsPerBatch, times.length, s(s.length / 2), s.head, times)
+    Lane(rowsPerBatch, times.length, s(s.length / 2), s.head, times, window)
   }
 
   /** Runs the streaming lanes whose name passes `selected`. The filter is
     * applied BEFORE a lane's thunk is invoked, so a deselected lane pays
     * nothing — no index build, no ANN train, no micro-batches (the sf1.0
     * targeted-sweep contract of SPARK_GRAFT_BENCH_ONLY). */
-  def run(spark: SparkSession, sfDir: String, batches: Int = 5,
+  def run(spark: SparkSession, sfDir: String, ledger: RunLedger,
+      batches: Int = 5,
       selected: String => Boolean = _ => true): Seq[(String, Lane)] = {
     Seq(
-      "stream_classify" -> (() => classifyLane(spark, sfDir, batches)),
-      "stream_dedup" -> (() => dedupLane(spark, sfDir, batches)),
-      "ann_probe_stream" -> (() => annLane(spark, sfDir, batches))
+      "stream_classify" -> (() => classifyLane(spark, sfDir, ledger, batches)),
+      "stream_dedup" -> (() => dedupLane(spark, sfDir, ledger, batches)),
+      "ann_probe_stream" -> (() => annLane(spark, sfDir, ledger, batches))
     ).filter { case (name, _) => selected(name) }.map { case (name, lane) =>
       name -> (try lane() catch { case e: Throwable =>
         System.err.println(s"[bench] streaming $name FAILED: $e")
         e.printStackTrace()
-        Lane(0, 0, -1.0, -1.0, Nil)
+        Lane(0, 0, -1.0, -1.0, Nil, RunLedger.EmptyWindow)
       })
     }
   }
@@ -54,7 +68,7 @@ object StreamingBench {
   /** Online classification: resident broadcast table (the serving
     * deployment), 2000 reads per trigger. */
   private def classifyLane(spark: SparkSession, sfDir: String,
-      batches: Int): Lane = {
+      ledger: RunLedger, batches: Int): Lane = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rowsPerBatch = 2000
@@ -86,12 +100,8 @@ object StreamingBench {
       stream.toDS(), confidence = 0.0, minHitGroups = 1) { (_, classified) =>
       classified.write.format("noop").mode("overwrite").save()
     }.start()
-    try stats(rowsPerBatch, (0 until batches).map { b =>
-      stream.addData(reads(b))
-      val t0 = System.nanoTime()
-      query.processAllAvailable()
-      (System.nanoTime() - t0) / 1e9
-    })
+    try triggers(ledger, query, rowsPerBatch, batches)(b =>
+      stream.addData(reads(b)))
     finally {
       query.stop(); mem.close(); records.unpersist(false); bcTax.destroy()
     }
@@ -100,7 +110,7 @@ object StreamingBench {
   /** Streaming near-dup suppression: 500 documents per trigger through the
     * MinHash-band ownership state. */
   private def dedupLane(spark: SparkSession, sfDir: String,
-      batches: Int): Lane = {
+      ledger: RunLedger, batches: Int): Lane = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rowsPerBatch = 500
@@ -119,15 +129,12 @@ object StreamingBench {
       survivors.write.format("noop").mode("overwrite").save()
     }
     val query = writer.start()
-    try stats(rowsPerBatch, (0 until batches).map { b =>
+    try triggers(ledger, query, rowsPerBatch, batches) { b =>
       stream.addData((0 until rowsPerBatch).map { i =>
         val n = b * rowsPerBatch + i
         (ts(b, i), n.toLong, texts(n % texts.length))
       })
-      val t0 = System.nanoTime()
-      query.processAllAvailable()
-      (System.nanoTime() - t0) / 1e9
-    })
+    }
     finally query.stop()
   }
 
@@ -135,7 +142,7 @@ object StreamingBench {
     * training contract, now on the streaming clock): 64 queries per
     * trigger, model + vectors frame loaded once before the stream. */
   private def annLane(spark: SparkSession, sfDir: String,
-      batches: Int): Lane = {
+      ledger: RunLedger, batches: Int): Lane = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rowsPerBatch = 64
@@ -153,15 +160,12 @@ object StreamingBench {
         nProbe = 4, rerank = 64) { (_, res) =>
         res.write.format("noop").mode("overwrite").save()
       }.start()
-      try stats(rowsPerBatch, (0 until batches).map { b =>
-        // cycle when the corpus is smaller than rows*batches
+      // cycle when the corpus is smaller than rows*batches
+      try triggers(ledger, query, rowsPerBatch, batches) { b =>
         stream.addData((0 until rowsPerBatch).map { i =>
           queries((b * rowsPerBatch + i) % queries.length)
         })
-        val t0 = System.nanoTime()
-        query.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      })
+      }
       finally query.stop()
     } finally {
       import scala.jdk.CollectionConverters._

@@ -38,7 +38,8 @@ object AnnRecallGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args.lift(1).getOrElse("/tmp/ann_recall_gate.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -58,7 +58,8 @@ object StreamingBatchRace {
       "baseline_artifacts/headtohead_r18_streaming.json")
     val stages = sys.env.getOrElse("RACE_STAGES", "classify,dedup")
       .split(",").map(_.trim).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -57,7 +57,7 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // density (sf1→sf5 exponent 2.09; the rewrite measured 0.0x there).
     // Two more shuffles of O(n) beats two fewer of O(n²/day).
     // r21: budgets first grew by the scale-adaptive scan fan-out (Q.fanOut,
-    // +1/+2 exchanges), then a per-lane LaneProfile A/B showed the exchange
+    // +1/+2 exchanges), then a per-lane fan-out A/B showed the exchange
     // only pays where the pre-exchange kernel is expensive — it was KEPT on
     // the genomic library/reads scans and t21 (g02/g05/g06/g11/g12 +1,
     // g03/g07/g08/g09/g13/g14/g15 +2, t21 +1) and REMOVED from the cheap-
@@ -118,8 +118,8 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // them different aggregate shapes, so the exchange is not reusable).
     // The two extra library-payload shuffles removed the duplicate-content
     // window work entirely: the 64x head-to-head went 212 s -> 16 s with
-    // them and the primitive-array collect (Bracken.weights scaladoc;
-    // BrackenProfile A/B keeps the measurement reproducible).
+    // them and the primitive-array collect (Bracken.weights scaladoc holds
+    // the measured stage times).
     "g05_bracken" -> ((7, 0)), "g06_index_stats" -> ((5, 0)),
     "g07_wide_classify" -> ((6, 0)), "g08_multisample" -> ((6, 0)),
     "g09_freq_classify" -> ((6, 0)), "g10_multisample_classify2" -> ((0, 0)),
