@@ -2,15 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** Persistent IVF-PQ index: the build/probe split of [[Similarity.ivfPqKnn]],
-  * mirroring the genomic index lifecycle (train/encode once, probe many).
-  *
-  * [[Similarity.ivfPqKnn]] re-trains the quantizers and re-encodes the whole
-  * corpus on every call — right for one-shot jobs, wrong for a serving
-  * workload where the corpus is stable and query batches keep arriving.
-  * [[build]] runs the training + encode pass once and persists:
+/** IVF-PQ (Jégou et al.'s IVFADC), written once: [[train]], [[encode]]
+  * and one [[probe]], mirroring the genomic index lifecycle (train/encode
+  * once, probe many). [[Similarity.ivfPqKnn]] is the one-shot composition
+  * — train, encode the base, probe it. [[build]] runs the same training +
+  * encode pass once and persists it for a serving workload, where the
+  * corpus is stable and query batches keep arriving:
   *
   *   - `<dir>/vectors/` — parquet partitioned by coarse cell, columns
   *     (nid, code, vec). A probe reads ONLY the `nProbe` probed cells
@@ -23,47 +21,67 @@ import org.apache.spark.sql.expressions.Window
   *     losslessly serializable as text).
   *
   * [[query]] loads the sidecar and probes: NO training code path exists in
-  * it — the spec proves a probe-only run answers from the index alone and
-  * matches the one-shot [[Similarity.ivfPqKnn]] byte-for-byte on the same
-  * parameters. The query side shares [[Similarity.shardedKnn]], so query
-  * sets beyond the driver bound auto-shard exactly like the one-shot path.
+  * it — the spec proves a probe-only run answers from the index alone. The
+  * query side shares [[Similarity.shardedKnn]], so query sets beyond the
+  * driver bound auto-shard exactly like every other kNN lane.
   */
 object AnnIndex {
 
-  /** The trained quantizer pair, exactly [[Similarity.ivfPqKnn]]'s internal
-    * model: coarse centroids `[cell][dim]` and residual PQ codebooks
-    * `[subspace][centroid][subDim]`, all milli-quantized longs. */
+  /** The trained quantizer pair: coarse centroids `[cell][dim]` and
+    * residual PQ codebooks `[subspace][centroid][subDim]`, all
+    * milli-quantized longs, plus the exact-long tables of the ADC
+    * decomposition of the approximate cosine:
+    *
+    *   dot(q, c + r̂) = dot(q, c) + Σ_s table[s][code_s]
+    *   ‖c + r̂‖²      = ‖c‖² + 2·Σ_s cross[cell][s][code_s] + Σ_s n2[s][code_s]
+    *
+    * (all longs below 2^53, so the one double division per pair is
+    * engine-independent and the v10 DuckDB oracle re-derives it). */
   case class Model(coarse: Array[Array[Long]],
       books: Array[Array[Array[Long]]]) {
     def nCells: Int = coarse.length
     def dim: Int = coarse(0).length
     def subspaces: Int = books.length
     def centroids: Int = books(0).length
+    lazy val centNorm2: Array[Long] = coarse.map(Similarity.sumSq)
+    lazy val n2: Array[Array[Long]] = books.map(_.map(Similarity.sumSq))
+    lazy val cross: Array[Array[Array[Long]]] =
+      coarse.map(Similarity.adcTable(_, books))
+
+    /** One query's ADC state: (qid, dot(q, c) per probed cell, the
+      * per-subspace dot table, ‖q‖). */
+    def queryTable(qid: Long, qvl: Array[Long], probed: Array[Int])
+        : (Long, Map[Int, Long], Array[Array[Long]], Double) =
+      (qid, probed.map(c => c -> Similarity.dotLong(qvl, 0, coarse(c))).toMap,
+        Similarity.adcTable(qvl, books), math.sqrt(Similarity.sumSq(qvl).toDouble))
   }
 
-  /** Train the coarse + residual quantizers (the [[Similarity.ivfPqKnn]]
-    * training contract: deterministic first-`trainN`-ids sample, exact
-    * integer Lloyd's, residual codebooks) and persist the encoded corpus
-    * partitioned by cell. One narrow encode pass over the base; the model
-    * sidecar is driver-side text. Returns the trained model. */
+  /** Train the coarse + residual quantizers on a deterministic sample (the
+    * first `trainN` ids, or the hash permutation under `scatter` — see
+    * [[Clustering.initOrder]]; the v10 oracle re-derives it with ORDER BY
+    * vec_id LIMIT trainN): coarse centroids are the shared integer Lloyd's
+    * with one subspace spanning all dims, the PQ codebooks the same Lloyd's
+    * over the sample's RESIDUALS from their coarse cell. Driver-side,
+    * bounded by the sample (trainN·dim·8 bytes), never the corpus. */
+  def train(base: Dataset[(Long, Array[Float])], nCells: Int, subspaces: Int,
+      centroids: Int, trainN: Int, iters: Int, scatter: Boolean): Model = {
+    Similarity.requireByteCodes(centroids)
+    val sample = Similarity.collectTrainSample(base, trainN, scatter)
+    val coarse = Similarity.trainSubspaceCodebooks(sample, 1, nCells, iters)(0)
+    val residuals = sample.map(v => assign(v, coarse)._2)
+    Model(coarse, Similarity.trainSubspaceCodebooks(residuals, subspaces,
+      centroids, iters))
+  }
+
+  /** [[train]] the quantizers and persist the encoded corpus partitioned by
+    * cell. One narrow encode pass over the base; the model sidecar is
+    * driver-side text. Returns the trained model. */
   def build(base: Dataset[(Long, Array[Float])], dir: String, nCells: Int = 8,
       subspaces: Int = 8, centroids: Int = 16, trainN: Int = 256,
       iters: Int = 3, scatter: Boolean = false): Model = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    require(centroids <= 256, s"PQ codes are one byte: centroids <= 256, got $centroids")
-    val sample = Similarity.collectTrainSample(base, trainN, scatter)
-    val coarse = Similarity.trainSubspaceCodebooks(sample, 1, nCells, iters)(0)
-    val dim = sample(0).length
-    val sampRes = sample.map { v =>
-      val c = Similarity.nearestSub(v, 0, dim, coarse)
-      Array.tabulate(dim)(i => v(i) - coarse(c)(i))
-    }
-    val books = Similarity.trainSubspaceCodebooks(sampRes, subspaces,
-      centroids, iters)
-    val model = Model(coarse, books)
+    val model = train(base, nCells, subspaces, centroids, trainN, iters, scatter)
     encodeWrite(model, base, dir, overwrite = true)
-    writeModel(spark, s"$dir/model.tsv", model)
+    writeModel(base.sparkSession, s"$dir/model.tsv", model)
     model
   }
 
@@ -130,41 +148,50 @@ object AnnIndex {
     } finally q.unpersist(false)
   }
 
-  /** The one narrow encode pass + cell-partitioned write shared by
-    * [[build]] (overwrite) and [[append]] (append). */
-  private def encodeWrite(model: Model, base: Dataset[(Long, Array[Float])],
-      dir: String, overwrite: Boolean): Unit = {
+  /** A quantized vector's coarse cell (nearest centroid, ties to the
+    * smallest cell) and its residual from that cell's centroid. */
+  private def assign(v: Array[Long], coarse: Array[Array[Long]]): (Int, Array[Long]) = {
+    val c = Similarity.nearestSub(v, 0, v.length, coarse)
+    (c, Array.tabulate(v.length)(i => v(i) - coarse(c)(i)))
+  }
+
+  /** The one narrow encode pass: (nid, cell, residual PQ code, vec) for
+    * every non-null base row. */
+  private[operators] def encode(model: Model, base: Dataset[(Long, Array[Float])])
+      : Dataset[(Long, Int, Array[Byte], Array[Float])] = {
     val spark = base.sparkSession
     import spark.implicits._
     val bcCoarse = spark.sparkContext.broadcast(model.coarse)
     val bcBooks = spark.sparkContext.broadcast(model.books)
     val dim = model.dim
-    val encoded = base.filter(_._2 != null).map { case (id, v) =>
+    base.filter(_._2 != null).map { case (id, v) =>
       // fail loudly on a batch whose vectors don't match the model: a
       // smaller dim would otherwise encode silently-wrong prefix codes
       require(v.length == dim,
         s"vector $id has dim ${v.length}, the index model expects $dim")
-      val co = bcCoarse.value
-      val qvl = Similarity.quantizeJvm(v)
-      val cell = Similarity.nearestSub(qvl, 0, qvl.length, co)
-      val res = Array.tabulate(qvl.length)(i => qvl(i) - co(cell)(i))
+      val (cell, res) = assign(Similarity.quantizeJvm(v), bcCoarse.value)
       (id, cell, Similarity.pqEncode(res, bcBooks.value), v)
-    }.toDF("nid", "cell", "code", "vec")
+    }
+  }
+
+  /** [[encode]] + the cell-partitioned write shared by [[build]]
+    * (overwrite) and [[append]] (append). */
+  private def encodeWrite(model: Model, base: Dataset[(Long, Array[Float])],
+      dir: String, overwrite: Boolean): Unit =
     // repartition ON the partition column first: each cell's rows land in
     // one task, so partitionBy emits one file per cell (per batch) instead
     // of (tasks x cells) shards — codes are S bytes/row, so even
     // billion-row cells stay block-sized; raise with repartition(n,
     // $"cell") if not
-    encoded.repartition(col("cell"))
+    encode(model, base).toDF("nid", "cell", "code", "vec")
+      .repartition(col("cell"))
       .write.mode(if (overwrite) "overwrite" else "append")
       .partitionBy("cell").parquet(s"$dir/vectors")
-  }
 
   /** Probe a built index: top-`k` exact-cosine neighbors per query, ADC
     * scan over the probed cells' codes + exact re-rank of the global
-    * top-`rerank` — the same arithmetic, probe rule, tie-breaks and
-    * candidate semantics as [[Similarity.ivfPqKnn]], minus its training
-    * and encode passes. Reads only the index directory. */
+    * top-`rerank` — the [[probe]] that [[Similarity.ivfPqKnn]] runs, minus
+    * its training and encode passes. Reads only the index directory. */
   def query(queries: Dataset[(Long, Array[Float])], dir: String, k: Int,
       nProbe: Int = 3, rerank: Int = 32,
       queryBound: Int = Similarity.DefaultQueryShardBound): DataFrame = {
@@ -175,73 +202,59 @@ object AnnIndex {
 
   /** [[query]] against an already-loaded model + vectors frame — the
     * serving form: load once, probe many (the streaming probe and any
-    * driver loop reuse the same model and table plan across calls). */
+    * driver loop reuse the same model and table plan across calls). Both
+    * sides read only the probed cells' partitions; the scan side reads
+    * only the `code` column. */
   def queryLoaded(queries: Dataset[(Long, Array[Float])], model: Model,
       table: DataFrame, k: Int, nProbe: Int = 3, rerank: Int = 32,
       queryBound: Int = Similarity.DefaultQueryShardBound): DataFrame = {
+    import table.sparkSession.implicits._
+    def inCells(cells: Array[Int]) =
+      table.filter(col("cell").isin(cells.map(c => c: Any): _*))
+    probe(queries, model, k, nProbe, rerank, queryBound)(
+      cells => inCells(cells)
+        .select(col("nid").cast("long"), col("cell").cast("int"), col("code"))
+        .as[(Long, Int, Array[Byte])],
+      cells => inCells(cells).select(col("nid").cast("long"), col("vec")))
+  }
+
+  /** The IVF-PQ probe, shared by [[queryLoaded]] and
+    * [[Similarity.ivfPqKnn]]: per query the `nProbe` nearest cells
+    * ([[Similarity.probeCells]]), one narrow ADC scan over `codes(probed)`
+    * — (nid, cell, code) rows — keeping per-partition bounded
+    * (sim desc, nid asc) heaps of `rerank` candidates, the global top-
+    * `rerank` per query ([[Similarity.topPerQuery]]), and the exact-cosine
+    * re-rank against `vecs(probed)` — (nid, vec) rows. `model` is by-name:
+    * it is forced on the first query shard, so an empty query set never
+    * trains a one-shot model. A base row lives in exactly one cell, so a
+    * (query, row) pair is scored at most once; the heaps only prune, so
+    * the result is independent of partitioning. */
+  private[operators] def probe(queries: Dataset[(Long, Array[Float])],
+      model: => Model, k: Int, nProbe: Int, rerank: Int, queryBound: Int)(
+      codes: Array[Int] => Dataset[(Long, Int, Array[Byte])],
+      vecs: Array[Int] => DataFrame): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val coarse = model.coarse
-    val books = model.books
-    val nCells = model.nCells
-    val dim = model.dim
-    val subspaces = model.subspaces
-    val centroids = model.centroids
-    val sub = dim / subspaces
-    // the exact-long lookup tables of the ADC decomposition (ivfPqKnn's):
-    //   dot(q, c + r̂) = dot(q, c) + Σ_s dotTable[s][code_s]
-    //   ‖c + r̂‖²      = ‖c‖² + 2·Σ_s cross[cell][s][code_s] + Σ_s n2[s][code_s]
-    val centNorm2 = coarse.map { m => var d = 0L; m.foreach(x => d += x * x); d }
-    val n2 = Array.tabulate(subspaces, centroids) { (s, j) =>
-      var d = 0L; books(s)(j).foreach(x => d += x * x); d
-    }
-    val cross = Array.tabulate(nCells, subspaces, centroids) { (c, s, j) =>
-      var d = 0L; var i = 0
-      while (i < sub) { d += coarse(c)(s * sub + i) * books(s)(j)(i); i += 1 }
-      d
-    }
     Similarity.shardedKnn(queries, queryBound) { qArr =>
       import spark.implicits._
-      for ((qid, qv) <- qArr) require(qv.length == dim,
-        s"query $qid has dim ${qv.length}, the index model expects $dim")
-      val nP = math.min(nProbe, nCells)
-      val qProbes = qArr.map { case (_, qv) =>
-        Similarity.probeCells(Similarity.quantizeJvm(qv), coarse, nP)
-      }
-      val qTables = qArr.zip(qProbes).map { case ((qid, qv), probed) =>
-        val qvl = Similarity.quantizeJvm(qv)
-        val dotQC = probed.map { c =>
-          var d = 0L; var i = 0
-          while (i < dim) { d += qvl(i) * coarse(c)(i); i += 1 }
-          c -> d
-        }.toMap
-        val tab = Array.tabulate(subspaces, centroids) { (s, j) =>
-          var d = 0L; var i = 0
-          while (i < sub) { d += qvl(s * sub + i) * books(s)(j)(i); i += 1 }
-          d
-        }
-        var qn = 0L
-        qvl.foreach(x => qn += x * x)
-        (qid, dotQC, tab, math.sqrt(qn.toDouble))
-      }
-      val cellQueries = Similarity.invertProbes(qProbes, nCells)
+      val m = model
+      for ((qid, qv) <- qArr) require(qv.length == m.dim,
+        s"query $qid has dim ${qv.length}, the index model expects ${m.dim}")
+      val nP = math.min(nProbe, m.nCells)
+      val qvls = qArr.map { case (_, qv) => Similarity.quantizeJvm(qv) }
+      val qProbes = qvls.map(Similarity.probeCells(_, m.coarse, nP))
+      val qTables = Array.tabulate(qArr.length)(i =>
+        m.queryTable(qArr(i)._1, qvls(i), qProbes(i)))
+      val cellQueries = Similarity.invertProbes(qProbes, m.nCells)
       val probed = qProbes.flatten.distinct.sorted
       val bcQ = spark.sparkContext.broadcast(qTables)
       val bcCellQ = spark.sparkContext.broadcast(cellQueries)
-      val bcCross = spark.sparkContext.broadcast(cross)
-      val bcN2 = spark.sparkContext.broadcast(n2)
-      val bcCN = spark.sparkContext.broadcast(centNorm2)
+      val bcCross = spark.sparkContext.broadcast(m.cross)
+      val bcN2 = spark.sparkContext.broadcast(m.n2)
+      val bcCN = spark.sparkContext.broadcast(m.centNorm2)
       val rr = rerank.max(k)
 
-      // the probe scan: cell isin(probed) prunes PARTITIONS (only
-      // nProbe-ish cells are read at all), the projection prunes to the
-      // S-byte code column — no quantize/encode per row, unlike the
-      // one-shot path
-      val codes = table
-        .select(col("nid").cast("long"), col("cell").cast("int"), col("code"))
-        .filter(col("cell").isin(probed.map(c => c: Any): _*))
-        .as[(Long, Int, Array[Byte])]
-      val scored = codes.mapPartitions { it =>
+      val scored = codes(probed).mapPartitions { it =>
         val qs = bcQ.value
         val cellQ = bcCellQ.value
         val crossT = bcCross.value
@@ -276,26 +289,9 @@ object AnnIndex {
         }
         Similarity.drainHeaps(qs.map(_._1), heapSim, heapId, heapN)
       }.toDF("qid", "nid", "asim")
-      val wa = Window.partitionBy(col("qid"))
-        .orderBy(col("asim").desc, col("nid").asc)
-      val candidates = scored
-        .withColumn("rn", row_number().over(wa)).filter(col("rn") <= rr)
+      val candidates = Similarity.topPerQuery(scored, "asim", rr)
         .select("qid", "nid")
-      // exact re-rank: true vectors for the surviving candidates only —
-      // the vec side also prunes to the probed cells (candidates can only
-      // come from them)
-      val vecSide = table.filter(col("cell").isin(probed.map(c => c: Any): _*))
-        .select(col("nid").cast("long"), col("vec"))
-      val qDf = queries.toDF("qid", "qv")
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("sim").desc, col("nid").asc)
-      val res = candidates.join(vecSide, "nid").join(qDf, "qid")
-        .select(col("qid"), col("nid"),
-          Similarity.cosineCol(col("qv"), col("vec")).as("sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .drop("rn")
-      (res, () => {
+      (Similarity.exactRerank(candidates, queries, vecs(probed), k), () => {
         bcQ.destroy(); bcCellQ.destroy(); bcCross.destroy()
         bcN2.destroy(); bcCN.destroy()
       })

@@ -37,13 +37,30 @@ object Similarity {
     graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = queries.select(col("id").as("qid"), col("vec").as("qv"))
     val b = base.select(col("id").as("nid"), col("vec").as("nv"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    q.join(b, col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    topPerQuery(q.join(b, col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim")),
+      "sim", k)
   }
+
+  /** The top `n` rows per `qid` by (`simCol` desc, nid asc) — the one
+    * candidate order of the kNN family. Every scan's [[boundedInsert]]
+    * heaps prune for exactly this window, which is what makes their
+    * results independent of partitioning. */
+  private[operators] def topPerQuery(df: DataFrame, simCol: String, n: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col(simCol).desc, col("nid").asc)))
+      .filter(col("rn") <= n)
+      .drop("rn")
+
+  /** Exact-cosine re-rank of (qid, nid) candidates: join the true query
+    * vectors and `vecs` — (nid, vec) rows — and keep the top `k` per query
+    * by [[topPerQuery]]. The tail of [[pqKnn]] and the IVF-PQ probe. */
+  private[operators] def exactRerank(candidates: DataFrame,
+      queries: Dataset[(Long, Array[Float])], vecs: DataFrame, k: Int): DataFrame =
+    topPerQuery(candidates.join(vecs.toDF("nid", "nv"), "nid")
+      .join(queries.toDF("qid", "qv"), "qid")
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim")),
+      "sim", k)
 
   // ---------------- random-hyperplane LSH ----------------
 
@@ -91,14 +108,10 @@ object Similarity {
     val queryB = queries.flatMap { case (id, v) =>
       probeBuckets(v, planes).iterator.map(b => (b, id, v))
     }.toDF("bucket", "qid", "qv")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    queryB.join(baseB, Seq("bucket"))
+    topPerQuery(queryB.join(baseB, Seq("bucket"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim"))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
+      .distinct(), "sim", k)
   }
 
   // ---------------- query-side sharding ----------------
@@ -228,7 +241,7 @@ object Similarity {
     // knn volume stress measured at 3-5x the cost of this scan (a base
     // row lives in ONE cell, so no dedup stage is needed either). The
     // heaps only PRUNE — (sim desc, nid asc) total-order bounded
-    // insertion is a superset of the global top-k — so the window below
+    // insertion is a superset of the global top-k — so [[topPerQuery]]
     // reduces their union to exactly the former plan's answer:
     // partitioning-independent, byte-identical, same SQL oracle.
     shardedKnn(queries, queryBound) { qArr =>
@@ -277,11 +290,7 @@ object Similarity {
         }
         drainHeaps(qs.map(_._1), heapSim, heapId, heapN)
       }.toDF("qid", "nid", "sim")
-      val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-      val topk = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .drop("rn")
-      (topk, () => {
+      (topPerQuery(scored, "sim", k), () => {
         bcQ.destroy(); bcCellQ.destroy(); bcCents.destroy()
       })
     }
@@ -326,8 +335,9 @@ object Similarity {
     * a NaN sim (zero-norm degenerate vectors under exact cosine) ranks
     * above every finite value here exactly as it would in the window the
     * heap prunes for, instead of falling through `<`'s always-false NaN
-    * comparisons into an arbitrary slot. Shared by [[int8Knn]], [[pqKnn]],
-    * [[ivfPqKnn]] and the [[ivfKnn]] scan. */
+    * comparisons into an arbitrary slot. Shared by the [[int8Knn]],
+    * [[pqKnn]] and [[ivfKnn]] scans and the IVF-PQ [[AnnIndex.probe]]; the
+    * window it prunes for is [[topPerQuery]]. */
   private[operators] def boundedInsert(sims: Array[Double], ids: Array[Long], n: Int,
       cap: Int, sim0: Double, nid: Long): Int = {
     // normalize -0.0 to +0.0: java.lang.Double.compare orders -0.0 < 0.0
@@ -401,10 +411,7 @@ object Similarity {
       }
       drainHeaps(qs.map(_._1), heapSim, heapId, heapN)
     }.toDF("qid", "nid", "sim")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    val res = topk.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
-    (res, () => bcQ.destroy())
+    (topPerQuery(topk, "sim", k), () => bcQ.destroy())
     }
   }
 
@@ -438,9 +445,16 @@ object Similarity {
   def trainPqCodebooks(base: Dataset[(Long, Array[Float])], subspaces: Int,
       centroids: Int, trainN: Int = 256, iters: Int = 3,
       scatter: Boolean = false): Array[Array[Array[Long]]] = {
+    requireByteCodes(centroids)
     val sample = collectTrainSample(base, trainN, scatter)
     trainSubspaceCodebooks(sample, subspaces, centroids, iters)
   }
+
+  /** PQ codes are one byte per subspace ([[pqEncode]]); a codebook of more
+    * than 256 centroids would wrap centroid 256 onto centroid 0. */
+  private[operators] def requireByteCodes(centroids: Int): Unit =
+    require(centroids <= 256,
+      s"PQ codes are one byte: centroids <= 256, got $centroids")
 
   /** The deterministic quantized training sample shared by the PQ family:
     * the `trainN` first rows by id order — or, with `scatter`, by the
@@ -463,8 +477,8 @@ object Similarity {
 
   /** The driver-side per-subspace integer Lloyd's over an already-collected
     * quantized sample — the shared training kernel of [[trainPqCodebooks]]
-    * (raw vectors) and [[ivfPqKnn]] (coarse centroids via subspaces = 1,
-    * then codebooks over RESIDUALS). Exactly the [[Clustering]] update
+    * (raw vectors) and [[AnnIndex.train]] (coarse centroids via
+    * subspaces = 1, then codebooks over RESIDUALS). Exactly the [[Clustering]] update
     * rules: init from the first `centroids` sample rows, exact long
     * distances with (dist, index) ties, round-half-up means, empty
     * clusters keep their previous centroid. */
@@ -519,8 +533,9 @@ object Similarity {
 
   /** The `nP` nearest cells of a quantized vector by (exact long distance,
     * cell index) — the [[graft.functions.NearestCentroids]] ordering,
-    * shared by [[ivfKnn]] and [[ivfPqKnn]] so the probe rule (and the v06/
-    * v10 oracles that re-derive it) can never diverge between them. */
+    * shared by [[ivfKnn]] and the IVF-PQ [[AnnIndex.probe]] so the probe
+    * rule (and the v06/v10 oracles that re-derive it) can never diverge
+    * between them. */
   private[operators] def probeCells(qvl: Array[Long], cents: Array[Array[Long]],
       nP: Int): Array[Int] = {
     val dim = qvl.length
@@ -548,6 +563,26 @@ object Similarity {
     qids.indices.iterator.flatMap { q =>
       (0 until heapN(q)).iterator.map(i => (qids(q), heapId(q)(i), heapSim(q)(i)))
     }
+
+  /** Exact long dot of `a[off, off + b.length)` with `b`. */
+  private[operators] def dotLong(a: Array[Long], off: Int, b: Array[Long]): Long = {
+    var d = 0L; var i = 0
+    while (i < b.length) { d += a(off + i) * b(i); i += 1 }
+    d
+  }
+
+  /** Exact long squared norm. */
+  private[operators] def sumSq(v: Array[Long]): Long = dotLong(v, 0, v)
+
+  /** The asymmetric-distance lookup table of one quantized vector against
+    * PQ codebooks `[subspace][centroid][subDim]`: `[s][j]` = exact long
+    * dot of the vector's subspace-`s` slice with centroid `j`. */
+  private[operators] def adcTable(qvl: Array[Long],
+      books: Array[Array[Array[Long]]]): Array[Array[Long]] = {
+    val sub = books(0)(0).length
+    Array.tabulate(books.length, books(0).length)((s, j) =>
+      dotLong(qvl, s * sub, books(s)(j)))
+  }
 
   /** PQ code of one quantized vector: per-subspace nearest centroid index
     * (one byte each — centroids <= 256). Allocation-free beyond the output
@@ -599,26 +634,19 @@ object Similarity {
     // pays the training pass (shardedKnn returns before touching it)
     lazy val books = trainPqCodebooks(base, subspaces, centroids, trainN,
       iters, scatter)
-    lazy val centNorm2 = Array.tabulate(subspaces, centroids) { (s, c) =>
-      var d = 0L; books(s)(c).foreach(x => d += x * x); d
-    }
+    lazy val centNorm2 = books.map(_.map(sumSq))
     shardedKnn(queries, queryBound) { qArr =>
     import spark.implicits._
+    val dim = subspaces * books(0)(0).length
+    for ((qid, qv) <- qArr) require(qv.length == dim,
+      s"query $qid has dim ${qv.length}, the PQ codebooks expect $dim")
     val bcBooks = spark.sparkContext.broadcast(books)
 
     // per-query lookup tables: EXACT long dot(q_sub, centroid) and exact
     // long norms; approx cosine = sum(dots) / (|q| * sqrt(sum |c|^2))
-    val sub = qArr(0)._2.length / subspaces
     val qTables = qArr.map { case (qid, qv) =>
       val qvl = quantizeJvm(qv)
-      val table = Array.tabulate(subspaces, centroids) { (s, c) =>
-        var d = 0L; var i = 0
-        while (i < sub) { d += qvl(s * sub + i) * books(s)(c)(i); i += 1 }
-        d
-      }
-      var qn = 0L
-      qvl.foreach(x => qn += x * x)
-      (qid, table, math.sqrt(qn.toDouble))
+      (qid, adcTable(qvl, books), math.sqrt(sumSq(qvl).toDouble))
     }
     val bcQ = spark.sparkContext.broadcast(qTables)
     val bcCN = spark.sparkContext.broadcast(centNorm2)
@@ -659,22 +687,8 @@ object Similarity {
     // reduce the union of partition-local top-rr prunes to the GLOBAL
     // top-rr per query — at most partitions x Q x rr tiny rows enter this
     // window, and the result no longer depends on the partitioning
-    val wa = Window.partitionBy(col("qid"))
-      .orderBy(col("asim").desc, col("nid").asc)
-    val candidates = scored
-      .withColumn("rn", row_number().over(wa)).filter(col("rn") <= rr)
-      .select("qid", "nid")
-
-    // exact re-rank of the surviving candidates only
-    val qDf = queries.toDF("qid", "qv")
-    val bDf = base.toDF("nid", "nv")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    val res = candidates.join(bDf, "nid").join(qDf, "qid")
-      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-    (res, () => {
+    val candidates = topPerQuery(scored, "asim", rr).select("qid", "nid")
+    (exactRerank(candidates, queries, base.toDF(), k), () => {
       bcQ.destroy(); bcCN.destroy(); bcBooks.destroy()
     })
     }
@@ -696,25 +710,14 @@ object Similarity {
     * to nProbe/nCells of the corpus. (The `knn` volume stress records the
     * measured three-way comparison.)
     *
-    * Exact integer arithmetic end to end, like every kernel here: the
-    * coarse quantizer and the per-subspace codebooks are the SAME
-    * driver-side integer Lloyd's ([[trainSubspaceCodebooks]] — coarse =
-    * one subspace spanning all dims), residuals are long subtractions,
-    * and the approximate cosine decomposes into exact-long tables:
-    *
-    *   dot(q, c + r̂)  = dot(q, c) + Σ_s dotTable[s][code_s]
-    *   ‖c + r̂‖²       = ‖c‖² + 2·Σ_s cross[cell][s][code_s]
-    *                      + Σ_s n2[s][code_s]
-    *
-    * (dotTable = query-subvector × codebook dots, cross = centroid-
-    * subvector × codebook dots, n2 = codebook norms — all longs below
-    * 2^53, so the one double division per pair is engine-independent and
-    * the whole lane carries a DuckDB oracle, v10.) A base row lives in
-    * exactly one cell, so a (query, row) pair is scored at most once; the
-    * per-partition bounded heaps order by (sim desc, nid asc) and only
-    * prune the global top-`rerank` window — partitioning-independent like
-    * [[pqKnn]]. Queries collect + broadcast (bounded); the corpus side is
-    * one narrow pass emitting ≤ partitions × Q × rerank candidate rows.
+    * Exact integer arithmetic end to end, like every kernel here, so the
+    * whole lane carries a DuckDB oracle (v10). One implementation: this is
+    * [[AnnIndex.train]] + [[AnnIndex.encode]] + the [[AnnIndex.probe]] a
+    * stored index runs ([[AnnIndex.query]]), over the freshly encoded base
+    * and with `base` itself as the re-rank side. Queries collect +
+    * broadcast (bounded, auto-sharded past `queryBound`); the corpus side
+    * is one narrow encode + scan pass emitting ≤ partitions × Q × rerank
+    * candidate rows.
     *
     * Sizing (measured in the dossier's knn-stress sweep): `rerank` is the
     * RECALL lever — with ~corpus·nProbe/nCells approx-scored candidates
@@ -732,136 +735,14 @@ object Similarity {
       rerank: Int = 32, trainN: Int = 256, iters: Int = 3,
       scatter: Boolean = false,
       queryBound: Int = DefaultQueryShardBound): DataFrame = {
-    val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // lazy: trained once, on the first query shard — an empty query set
-    // never pays the training pass
-    lazy val model = {
-      // deterministic training sample: quantized first-trainN ids (the same
-      // contract as trainPqCodebooks / ivfKnn, so the v10 oracle re-derives
-      // it with ORDER BY vec_id LIMIT trainN), hash-permuted under `scatter`
-      val sample = collectTrainSample(base, trainN, scatter)
-      // coarse centroids = the shared integer Lloyd's with ONE subspace
-      val coarse = trainSubspaceCodebooks(sample, 1, nCells, iters)(0)
-      val dim = sample(0).length
-      val sub = dim / subspaces
-      // PQ codebooks over the sample's residuals from its coarse cell
-      val sampRes = sample.map { v =>
-        val c = nearestSub(v, 0, dim, coarse)
-        Array.tabulate(dim)(i => v(i) - coarse(c)(i))
-      }
-      val books = trainSubspaceCodebooks(sampRes, subspaces, centroids, iters)
-
-      // driver-side lookup tables, all exact longs
-      val centNorm2 = coarse.map { m => var d = 0L; m.foreach(x => d += x * x); d }
-      val n2 = Array.tabulate(subspaces, centroids) { (s, j) =>
-        var d = 0L; books(s)(j).foreach(x => d += x * x); d
-      }
-      val cross = Array.tabulate(nCells, subspaces, centroids) { (c, s, j) =>
-        var d = 0L; var i = 0
-        while (i < sub) { d += coarse(c)(s * sub + i) * books(s)(j)(i); i += 1 }
-        d
-      }
-      (coarse, books, centNorm2, n2, cross)
-    }
-    shardedKnn(queries, queryBound) { qArr =>
-    import spark.implicits._
-    val (coarse, books, centNorm2, n2, cross) = model
-    val dim = coarse(0).length
-    val sub = dim / subspaces
-    // per query: probed cells by (exact dist, cell) order, dot(q, cell
-    // centroid) per probed cell, dot tables, norm
-    val nP = math.min(nProbe, nCells)
-    val qProbes = qArr.map { case (_, qv) =>
-      probeCells(quantizeJvm(qv), coarse, nP)
-    }
-    val qTables = qArr.zip(qProbes).map { case ((qid, qv), probed) =>
-      val qvl = quantizeJvm(qv)
-      val dotQC = probed.map { c =>
-        var d = 0L; var i = 0
-        while (i < dim) { d += qvl(i) * coarse(c)(i); i += 1 }
-        c -> d
-      }.toMap
-      val table = Array.tabulate(subspaces, centroids) { (s, j) =>
-        var d = 0L; var i = 0
-        while (i < sub) { d += qvl(s * sub + i) * books(s)(j)(i); i += 1 }
-        d
-      }
-      var qn = 0L
-      qvl.foreach(x => qn += x * x)
-      (qid, dotQC, table, math.sqrt(qn.toDouble))
-    }
-    val cellQueries = invertProbes(qProbes, nCells)
-    val bcCoarse = spark.sparkContext.broadcast(coarse)
-    val bcBooks = spark.sparkContext.broadcast(books)
-    val bcQ = spark.sparkContext.broadcast(qTables)
-    val bcCellQ = spark.sparkContext.broadcast(cellQueries)
-    val bcCross = spark.sparkContext.broadcast(cross)
-    val bcN2 = spark.sparkContext.broadcast(n2)
-    val bcCN = spark.sparkContext.broadcast(centNorm2)
-    val rr = rerank.max(k)
-
-    val scored = base.filter(_._2 != null).mapPartitions { it =>
-      val coarse = bcCoarse.value
-      val books = bcBooks.value
-      val qs = bcQ.value
-      val cellQ = bcCellQ.value
-      val cross = bcCross.value
-      val n2 = bcN2.value
-      val cn = bcCN.value
-      val dim = coarse(0).length
-      val heapSim = Array.fill(qs.length)(new Array[Double](rr))
-      val heapId = Array.fill(qs.length)(new Array[Long](rr))
-      val heapN = new Array[Int](qs.length)
-      val res = new Array[Long](dim)
-      for ((nid, nv) <- it) {
-        val qvl = quantizeJvm(nv)
-        val cell = nearestSub(qvl, 0, dim, coarse)
-        var i = 0
-        while (i < dim) { res(i) = qvl(i) - coarse(cell)(i); i += 1 }
-        val code = pqEncode(res, books)
-        val qIdxs = cellQ(cell)
-        var qi = 0
-        while (qi < qIdxs.length) {
-          val q = qIdxs(qi)
-          val (qid, dotQC, table, qnorm) = qs(q)
-          if (qid != nid) {
-            var dot = dotQC(cell)
-            var nn = cn(cell)
-            var s = 0
-            while (s < code.length) {
-              val j = code(s) & 0xff
-              dot += table(s)(j)
-              nn += 2 * cross(cell)(s)(j) + n2(s)(j)
-              s += 1
-            }
-            val sim = if (qnorm == 0.0 || nn <= 0L) 0.0
-              else dot.toDouble / (qnorm * math.sqrt(nn.toDouble))
-            heapN(q) = boundedInsert(heapSim(q), heapId(q), heapN(q), rr, sim, nid)
-          }
-          qi += 1
-        }
-      }
-      drainHeaps(qs.map(_._1), heapSim, heapId, heapN)
-    }.toDF("qid", "nid", "asim")
-    val wa = Window.partitionBy(col("qid"))
-      .orderBy(col("asim").desc, col("nid").asc)
-    val candidates = scored
-      .withColumn("rn", row_number().over(wa)).filter(col("rn") <= rr)
-      .select("qid", "nid")
-    val qDf = queries.toDF("qid", "qv")
-    val bDf = base.toDF("nid", "nv")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    val res = candidates.join(bDf, "nid").join(qDf, "qid")
-      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-    (res, () => {
-      bcQ.destroy(); bcCellQ.destroy(); bcCoarse.destroy(); bcBooks.destroy()
-      bcCross.destroy(); bcN2.destroy(); bcCN.destroy()
-    })
-    }
+    import base.sparkSession.implicits._
+    // lazy: trained and encoded once, on the first query shard — an empty
+    // query set never pays the training pass
+    lazy val model = AnnIndex.train(base, nCells, subspaces, centroids,
+      trainN, iters, scatter)
+    lazy val codes = AnnIndex.encode(model, base).map(r => (r._1, r._2, r._3))
+    AnnIndex.probe(queries, model, k, nProbe, rerank, queryBound)(
+      _ => codes, _ => base.toDF())
   }
 
   /** All pairs above a cosine threshold via LSH buckets (near-dup detection

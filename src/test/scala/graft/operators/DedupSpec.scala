@@ -653,6 +653,44 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
       .flatMap(s => books1(s)(code(s) & 0xff).map(_ / 1000f)).toArray
     assert(cosine(v, recon) > 0.9, s"poor reconstruction: ${cosine(v, recon)}")
   }
+
+  test("PQ and IVF-PQ kNN reject more than 256 centroids: codes are one " +
+    "byte, so centroid 256 would be scored as centroid 0") {
+    import spark.implicits._
+    val r = new Random(5)
+    val corpus = spark.createDataset((0L until 300L).map(i =>
+      (i, Array.fill(dim)(r.nextGaussian().toFloat))))
+    val queries = corpus.filter(_._1 < 3)
+    val lanes = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      ("pq", () => Similarity.pqKnn(queries, corpus, k = 3, subspaces = 8,
+        centroids = 257, trainN = 300)),
+      ("ivfpq", () => Similarity.ivfPqKnn(queries, corpus, k = 3, nCells = 8,
+        subspaces = 8, centroids = 257, trainN = 300)))
+    for ((name, run) <- lanes) {
+      val e = intercept[IllegalArgumentException](run().collect())
+      assert(e.getMessage.contains("centroids"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("PQ and IVF-PQ kNN reject a query whose dim differs from the base, " +
+    "naming both dims") {
+    import spark.implicits._
+    val r = new Random(6)
+    val corpus = spark.createDataset((0L until 64L).map(i =>
+      (i, Array.fill(64)(r.nextGaussian().toFloat))))
+    val short = spark.createDataset(Seq(
+      (1000L, Array.fill(56)(r.nextGaussian().toFloat))))
+    val lanes = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      ("pq", () => Similarity.pqKnn(short, corpus, k = 3, subspaces = 8,
+        centroids = 16, trainN = 64)),
+      ("ivfpq", () => Similarity.ivfPqKnn(short, corpus, k = 3, nCells = 8,
+        subspaces = 8, centroids = 16, trainN = 64)))
+    for ((name, run) <- lanes) {
+      val e = intercept[IllegalArgumentException](run().collect())
+      assert(e.getMessage.contains("56") && e.getMessage.contains("64"),
+        s"$name: ${e.getMessage}")
+    }
+  }
 }
 
 class TextAnalysisSpec extends AnyFunSuite {
